@@ -16,13 +16,6 @@ Design stance (see SURVEY.md §7):
 
 import os as _os
 
-from decaton_spark._vendor import ensure_protobuf as _ensure_protobuf
-
-# Make google.protobuf importable (vendored mini-runtime) when absent:
-# unlocks transformWithStateInPandas' Python state-server clients. Must
-# run before any SparkSession exists so workers inherit PYTHONPATH.
-_ensure_protobuf()
-
 
 def _ensure_workers_can_import() -> None:
     """Put this package's import root on PYTHONPATH for Spark workers.
@@ -34,12 +27,12 @@ def _ensure_workers_can_import() -> None:
     Arrow-batched stage whose closure references a module-level
     function (e.g. ``protocol._decode_task_requests_python``'s
     ``parse_task_request``) dies with ``ModuleNotFoundError`` when the
-    launch directory isn't the checkout (VERDICT r8 #1). Same hazard,
-    same cure as ``_vendor.ensure_protobuf``: append (never prepend —
-    an installed/`--py-files`-shipped copy wins) the package's parent
-    to ``PYTHONPATH`` before any SparkSession exists. Works for a zip
-    import too: the parent is then the ``.pyz``/``.zip`` path, which
-    zipimport resolves on workers exactly as on the driver.
+    launch directory isn't the checkout (VERDICT r8 #1). The cure:
+    append (never prepend — an installed/`--py-files`-shipped copy
+    wins) the package's parent to ``PYTHONPATH`` before any
+    SparkSession exists. Works for a zip import too: the parent is
+    then the ``.pyz``/``.zip`` path, which zipimport resolves on
+    workers exactly as on the driver.
     """
     pkg_dir = _os.path.dirname(_os.path.abspath(__file__))
     root = _os.path.dirname(pkg_dir)

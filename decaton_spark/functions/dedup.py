@@ -443,6 +443,12 @@ def verify_pairs_jaccard(
     pair metadata next to the score never has to join the result back
     to the candidate stream (that join-back re-shuffled the whole pair
     stream twice and forced the candidates through a checkpoint)."""
+    missing = [c for c in carry if c not in pairs.columns]
+    if missing:
+        raise ValueError(f"carry columns not in pairs: {missing}")
+    clashing = sorted(set(carry) & {"id_a", "id_b", "grams_a", "grams_b", "jaccard"})
+    if clashing:
+        raise ValueError(f"carry columns clash with output columns: {clashing}")
     par = df.sparkSession.sparkContext.defaultParallelism
     grams = (
         F.array_distinct(F.split(F.col("_t"), " "))

@@ -448,7 +448,7 @@ def histogram_sketch_quantiles(
         F.min("v2").alias("mn2"), F.max("v2").alias("mx2")
     )
     # Pure-integer bucket assignment ((v2-mn2) ≥ 0, so DIV == floor):
-    # bit-identical to the streaming twin (stateful.py / tws.py) and to
+    # bit-identical to the streaming twin (stateful.py) and to
     # the DuckDB oracle's `//` at ANY magnitude — the former double
     # floor diverged once (v2-mn2)*buckets exceeded 2^53 or on
     # double-rounding at exact bucket edges of very wide ranges.

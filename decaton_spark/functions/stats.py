@@ -71,7 +71,8 @@ def welch_ttest(
         dof = (va/n_a + vb/n_b)² /
               ((va/n_a)²/(n_a-1) + (vb/n_b)²/(n_b-1))   (Welch–Satterthwaite)
 
-    Groups where either arm has < 2 observations report NULL t/dof.
+    Groups where either arm has < 2 observations, or where both arms
+    have zero variance, report NULL t/dof.
     Returns (group…, n_a, n_b, sum_centi_a, sum_centi_b, t_stat,
     welch_dof) with t rounded to 6 and dof to 4 digits (sqrt-derived
     continuous values: exact rounding halves are measure-zero).
@@ -97,7 +98,10 @@ def welch_ttest(
         (va / d("n_a")) * (va / d("n_a")) / (d("n_a") - 1)
         + (vb / d("n_b")) * (vb / d("n_b")) / (d("n_b") - 1)
     )
-    ok = (F.col("n_a") >= 2) & (F.col("n_b") >= 2)
+    # And short-circuits, so se2 (a division by n·(n-1)) is evaluated
+    # only once both arms have n >= 2; se2 = 0 would divide by zero
+    # under ANSI mode instead of yielding NULL.
+    ok = (F.col("n_a") >= 2) & (F.col("n_b") >= 2) & (se2 > 0)
     return agg.select(
         *group_cols,
         "n_a",

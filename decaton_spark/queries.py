@@ -5483,7 +5483,7 @@ def events_trajectories(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("long").cast("string"),
         ).alias("step"),
     )
-    w_user = Window.partitionBy("user_id").orderBy("ms", "event_id")
+    w_user = Window.partitionBy("user_id").orderBy("ms", "event_id", "step")
     w_run = w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ordered = steps.withColumn("prev", F.lag("ms").over(w_user)).withColumn(
         "pos", F.row_number().over(w_user)

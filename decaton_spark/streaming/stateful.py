@@ -16,13 +16,13 @@ rows within a (key, batch) are processed in (partition, offset) order,
 preserving Decaton's PROCESS_ORDERING invariant; keys are independent,
 giving SERIAL_PROCESSING per key.
 
-API dispatch: builders with an ``api`` parameter prefer the Spark 4
-``transformWithStateInPandas`` forms in ``tws.py`` (typed state +
-native per-key timers — SURVEY §2.7's named primitive) when the engine
-path is available (``api="auto"``), and fall back to the
-``applyInPandasWithState`` forms below when it is gated (this container
-lacks TWS's ``google.protobuf`` state-protocol dependency).
-``api="legacy"`` / ``api="tws"`` force a path.
+One state API: every operator here is a single
+``applyInPandasWithState`` form (the ``mapGroupsWithState`` model of
+the Structured Streaming paper). It runs unchanged on either state-store
+provider — the default HDFS-backed store or RocksDB
+(``spark.sql.streaming.stateStore.providerClass``); timers are
+``GroupStateTimeout.ProcessingTimeTimeout`` emulations, fired by
+no-data microbatches.
 """
 
 from __future__ import annotations
@@ -34,32 +34,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from decaton_spark.streaming.tws import tws_available
-
-
-def _use_tws(api: str) -> bool:
-    if api not in ("auto", "tws", "legacy"):
-        raise ValueError(f"api must be auto|tws|legacy, got {api!r}")
-    if api == "tws":
-        return True
-    if api != "auto":
-        return False
-    if not tws_available():
-        return False
-    # transformWithStateInPandas requires the RocksDB state store
-    # provider; under "auto", only take the TWS path when the active
-    # session has opted in (configure_tws) — otherwise the query would
-    # fail at start. api="tws" skips this guard (caller's assertion).
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return False
-    provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    )
-    return "RocksDB" in (provider or "")
 
 
 @functools.lru_cache(maxsize=65536)
@@ -92,7 +66,6 @@ def streaming_compact(
     *,
     window_ms: int = 3_600_000,
     key_col: str = "key",
-    api: str = "auto",
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """Streaming T1: emits the current survivor per (key, linger window)
@@ -109,12 +82,6 @@ def streaming_compact(
     row later than the TTL re-opens its window fresh — the standard
     watermark trade).
     """
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_compact
-
-        return tws_compact(
-            tasks, window_ms=window_ms, key_col=key_col, state_ttl_ms=state_ttl_ms
-        )
     out_schema = (
         f"{key_col} string, window_start_ms long, offset long, "
         "meta_timestamp_millis long, value string"
@@ -197,7 +164,6 @@ def ordered_process(
     tasks: DataFrame,
     *,
     key_col: str = "key",
-    api: str = "auto",
 ) -> DataFrame:
     """Per-key ordered, serial, at-least-once processing — the Decaton
     delivery-guarantee core (SURVEY §5 layer 2).
@@ -214,10 +180,6 @@ def ordered_process(
     construction: a key lives in exactly one state-store partition and
     its update function runs single-threaded.
     """
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_ordered
-
-        return tws_ordered(tasks, key_col=key_col)
     out_schema = (
         f"{key_col} string, offset long, prev_offset long, regressed boolean"
     )
@@ -264,7 +226,6 @@ def streaming_quota(
     window_ms: int = 10_000,
     depth: int = 4,
     width: int = 64,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming T6: per-partition Count-Min sketch state with
     conservative update (the reference's KeyCounter.java:121-142), keys
@@ -283,13 +244,6 @@ def streaming_quota(
     of wiping the active one (arrival order within a microbatch is
     offset order, not timestamp order).
     """
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_quota
-
-        return tws_quota(
-            tasks, quota_per_window, window_ms=window_ms, depth=depth,
-            width=width,
-        )
     out_schema = "key string, offset long, estimate long, quota_verdict string"
     state_schema = "win long, counts array<long>, prev_counts array<long>"
 
@@ -358,7 +312,6 @@ def streaming_batch(
     *,
     capacity: int = 100,
     linger_ms: int = 1_000,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming T2 — size+time microbatching with BatchingProcessor
     semantics (``BatchingProcessor.java:126-163``): buffer tasks per
@@ -377,11 +330,6 @@ def streaming_batch(
     Requires no-data microbatches (Spark default) so linger flushes
     fire without new input.
     """
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_batch
-
-        return tws_batch(tasks, capacity=capacity, linger_ms=linger_ms)
-
     import time as _time
 
     out_schema = (
@@ -461,7 +409,6 @@ def streaming_scheduled(
     tasks: DataFrame,
     *,
     key_col: str = "key",
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming T4 — scheduled execution via stateful timers.
 
@@ -477,15 +424,8 @@ def streaming_scheduled(
     operator pointed at the retry topic).
 
     Requires no-data microbatches (Spark default) so timeouts fire
-    without new input. Under ``api="tws"`` (or auto where available)
-    the timeout emulation is replaced by native per-key timers —
-    release at exactly the earliest pending due time.
+    without new input.
     """
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_scheduled
-
-        return tws_scheduled(tasks, key_col=key_col)
-
     import time as _time
 
     out_schema = (
@@ -580,7 +520,6 @@ def streaming_heavy_hitters(
     *,
     depth: int = 4,
     width: int = 1024,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming heavy-hitter alerts: emit one row the FIRST time a
     key's Count-Min-estimated count reaches ``threshold`` — the
@@ -603,10 +542,6 @@ def streaming_heavy_hitters(
     Emits (key, offset, estimate) with ``offset`` = the record that
     tripped the crossing, in per-partition arrival order.
     """
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_heavy_hitters
-
-        return tws_heavy_hitters(tasks, threshold, depth=depth, width=width)
     out_schema = "key string, offset long, estimate long"
     state_schema = "counts array<long>, alerted array<string>"
 
@@ -657,7 +592,6 @@ def streaming_zscore_alerts(
     *,
     threshold: float = 2.0,
     n: int = 10,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming rolling z-score anomaly alerts per user — the
     continuous form of the ``events_rolling_zscore`` batch query: each
@@ -683,10 +617,6 @@ def streaming_zscore_alerts(
             F.round(F.col("value") * 100).cast("long").alias("xv"),
         )
     )
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_zscore
-
-        return tws_zscore(src, threshold=threshold, n=n)
     out_schema = "event_id long, user_id long, zscore double"
     state_schema = "xs array<long>"
 
@@ -735,7 +665,6 @@ def streaming_lsh_candidates(
     id_col: str = "doc_id",
     k: int = 3,
     bands: int = 4,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming near-duplicate CANDIDATE pairs: an accumulating LSH
     index over the document stream. Each arriving doc is banded with
@@ -755,12 +684,6 @@ def streaming_lsh_candidates(
     State per bucket is the member id list: total state = one long per
     (doc, band) — 4 longs/doc at the defaults, watermark/TTL-evictable
     at cluster scale if the dedup horizon is bounded."""
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_lsh_candidates
-
-        return tws_lsh_candidates(
-            docs, text_col=text_col, id_col=id_col, k=k, bands=bands
-        )
     from decaton_spark.functions.dedup import minhash_band_signatures
 
     stacked = minhash_band_signatures(
@@ -805,7 +728,6 @@ def streaming_kmv(
     *,
     k: int = 32,
     ndigits: int = 12,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming KMV distinct estimation: maintain the bottom-k md5
     order statistics of each group's distinct values in keyed state
@@ -821,10 +743,6 @@ def streaming_kmv(
     tests). State per group is ≤k (hash, value) pairs regardless of
     stream cardinality — the whole point of KMV.
     """
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_kmv
-
-        return tws_kmv(events, value_col, group_col, k=k, ndigits=ndigits)
     import hashlib
 
     out_schema = (
@@ -882,7 +800,6 @@ def streaming_histogram_quantiles(
     bounds: dict[str, tuple[int, int]],
     buckets: int = 64,
     quantiles: tuple[int, ...] = (50, 90, 99),
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming equi-width histogram quantiles: per-group bucket
     counters in keyed state, refreshed estimates emitted whenever a
@@ -899,13 +816,6 @@ def streaming_histogram_quantiles(
     equals the batch sketch over the same rows with the same bounds,
     for ANY microbatch split. State per group is ≤``buckets`` counts.
     """
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_histogram_quantiles
-
-        return tws_histogram_quantiles(
-            events, value_col, group_col,
-            bounds=bounds, buckets=buckets, quantiles=quantiles,
-        )
     out_cols = ", ".join(f"p{q}_centi long" for q in quantiles)
     out_schema = f"{group_col} string, n long, {out_cols}"
     state_schema = "bs array<long>, cs array<long>"
@@ -1071,7 +981,6 @@ def streaming_ab_monitor(
     group_col: str = "event_type",
     arm_col: str = "arm",
     value_centi_col: str = "v",
-    api: str = "auto",
 ) -> DataFrame:
     """Continuous A/B readout: the streaming twin of
     ``functions.stats.welch_ttest``. State per group is the six exact
@@ -1090,16 +999,6 @@ def streaming_ab_monitor(
     welch_dof) per group per microbatch that touches it.
     """
     import math
-
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_ab_monitor
-
-        return tws_ab_monitor(
-            events,
-            group_col=group_col,
-            arm_col=arm_col,
-            value_centi_col=value_centi_col,
-        )
 
     out_schema = (
         f"{group_col} string, n_a long, n_b long,"
@@ -1129,9 +1028,8 @@ def streaming_ab_monitor(
             se2 = va / dna + vb / dnb
             if se2 <= 0.0:
                 # both arms zero-variance (constant metric): the batch
-                # welch_ttest yields NULL t/dof here (Spark div-by-zero
-                # -> NULL); raising would kill the streaming query on
-                # one degenerate group (self-review r7)
+                # welch_ttest reports NULL t/dof here; raising would
+                # kill the streaming query on one degenerate group
                 t = dof = None
                 se2 = None
         if se2 is not None:
@@ -1176,7 +1074,6 @@ def streaming_psi_monitor(
     group_col: str = "event_type",
     bucket_col: str = "bucket",
     n_bins: int = 20,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming PSI drift monitor: the streaming twin of the batch
     ``events_psi_drift`` gauge. The reference (pre-period) histogram
@@ -1200,17 +1097,6 @@ def streaming_psi_monitor(
     microbatch.
     """
     import math
-
-    if _use_tws(api):
-        from decaton_spark.streaming.tws import tws_psi_monitor
-
-        return tws_psi_monitor(
-            events,
-            baselines=baselines,
-            group_col=group_col,
-            bucket_col=bucket_col,
-            n_bins=n_bins,
-        )
 
     out_schema = f"{group_col} string, n_obs long, n_buckets long, psi_upm long"
     state_schema = "counts array<bigint>, n long"

@@ -1,4 +1,4 @@
-"""Metrics (observe/listener) and dynamic-property supplier tests."""
+"""Dynamic-property supplier tests (``decaton_spark.config``)."""
 
 from __future__ import annotations
 
@@ -13,47 +13,6 @@ from decaton_spark.config import (
     StaticPropertySupplier,
     chain,
 )
-from decaton_spark.envelope import events_to_tasks
-from decaton_spark.metrics import attach, observe_tasks
-from decaton_spark.sources import load_table
-
-
-def test_observe_counters(spark, sf_dir):
-    tasks = events_to_tasks(load_table(spark, "events", sf_dir))
-    observed = observe_tasks(tasks)
-    n = observed.count()
-    # observation values surface on the collected metrics of the action
-    metrics = observed.collect()  # materialize; observe rides along
-    assert len(metrics) == n
-
-
-def test_metrics_listener_streaming(spark, sf_dir, tmp_path):
-    tasks = events_to_tasks(load_table(spark, "events", sf_dir)).drop("timestamp")
-    d = tmp_path / "in"
-    tasks.repartition(2).write.parquet(str(d))
-    listener = attach(spark)
-    try:
-        stream = spark.readStream.schema(tasks.schema).parquet(str(d))
-        q = (
-            observe_tasks(stream)
-            .writeStream.foreachBatch(lambda df, bid: df.count())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-        deadline = time.time() + 30
-        while time.time() < deadline and not any(
-            p.get("observed") for p in listener.progress
-        ):
-            time.sleep(0.5)  # listener delivery is async
-    finally:
-        spark.streams.removeListener(listener)
-    obs = [p["observed"] for p in listener.progress if p.get("observed")]
-    assert obs, "no observed metrics delivered"
-    total = sum(o["tasks_processed"] for o in obs)
-    assert total == tasks.count()
-    assert all(o["retry_count_total"] == 0 for o in obs)
 
 
 def test_static_supplier_and_defaults():

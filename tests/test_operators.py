@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -303,6 +305,27 @@ def test_checkpoint_fresh_stats_bounds_size_estimate(spark):
     # inherited stats would give bits ~ [126, 252, 504, 1008]; the
     # fresh leaf stays at the defaultSizeInBytes constant (= 63)
     assert max(bits) == min(bits) <= 64, bits
+
+
+@pytest.mark.parametrize(
+    "carry, bad",
+    [(("band", "nope"), "not in pairs: ['nope']"), (("jaccard",), "clash")],
+)
+def test_verify_pairs_jaccard_rejects_bad_carry(spark, carry, bad):
+    """carry= names must exist in ``pairs`` and not collide with the
+    output/join columns: both fail at entry with the bad names, not deep
+    in the join chain."""
+    from decaton_spark.functions.dedup import verify_pairs_jaccard
+
+    docs = spark.createDataFrame([(1, "a b"), (2, "a c")], "doc_id long, text string")
+    pairs = spark.createDataFrame(
+        [(1, 2, 0, 0.5)], "id_a long, id_b long, band int, jaccard double"
+    )
+    with pytest.raises(ValueError, match=re.escape(bad)):
+        verify_pairs_jaccard(docs, pairs, carry=carry)
+    # a valid carry still resolves
+    out = verify_pairs_jaccard(docs, pairs.drop("jaccard"), carry=("band",))
+    assert out.columns == ["id_a", "id_b", "band", "jaccard"]
 
 
 def test_span_dedup_semantics(spark):

@@ -233,6 +233,119 @@ def test_streaming_compaction_survives_restart(spark, sf_dir, tmp_path):
     got = got.sort_values(key, ignore_index=True)
     expected = expected.sort_values(key, ignore_index=True)
     assert got.equals(expected), "restart lost or corrupted compaction state"
+
+
+def _task_rows(spark):
+    return spark.createDataFrame(
+        [
+            ("k1", 1_000, 1, "a"),
+            ("k1", 2_000, 2, "b"),
+            ("k2", 1_500, 3, "c"),
+            ("k1", HOUR_MS + 5, 4, "d"),  # second linger window
+            ("k2", 1_200, 5, "e"),  # later offset, earlier ts -> loses
+        ],
+        "key string, meta_timestamp_millis long, offset long, value string",
+    )
+
+
+def test_streaming_compact_plans_apply_in_pandas_with_state(spark):
+    """Every stateful builder has one form: the applyInPandasWithState
+    plan, whatever state-store provider the session configures."""
+    plan = streaming_compact(_task_rows(spark))._jdf.queryExecution().analyzed().toString()
+    assert "FlatMapGroupsInPandasWithState" in plan
+
+
+def test_streaming_compact_runs_on_rocksdb(spark, tmp_path):
+    """The same operator is green under the RocksDB state-store provider
+    with changelog checkpointing (the production config PERFORMANCE.md
+    documents): same survivors as the default HDFS-backed store."""
+    src = tmp_path / "src"
+    src.mkdir()
+    rows = _task_rows(spark)
+    rows.coalesce(1).write.parquet(str(src / "b0"))
+    confs = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        ),
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:  # the provider conf is read at query start
+        stream = spark.readStream.schema(rows.schema).parquet(f"{src}/*")
+        q = (
+            streaming_compact(stream, window_ms=HOUR_MS)
+            .writeStream.format("memory")
+            .queryName("compact_rocks")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        q.stop()
+    finally:
+        for k, v in prev.items():
+            if v:
+                spark.conf.set(k, v)
+            else:
+                spark.conf.unset(k)
+    got = _final_survivors(spark, "compact_rocks").toPandas()
+    survivors = {
+        (r["key"], r["window_start_ms"]): r["offset"] for _, r in got.iterrows()
+    }
+    assert survivors == {("k1", 0): 2, ("k1", HOUR_MS): 4, ("k2", 0): 3}
+
+
+def test_streaming_compact_state_ttl_evicts_behind_horizon(spark, tmp_path):
+    """``state_ttl_ms`` evicts windows behind the key's newest window
+    minus the TTL, AFTER their final emission: a later row for an
+    evicted window re-opens it fresh, even one that would have lost to
+    the evicted survivor."""
+    import time
+
+    d = tmp_path / "stream"
+    d.mkdir()
+    schema = "key string, meta_timestamp_millis long, offset long, value string"
+    files = [
+        [("k", 100, 1, "a"), ("k", 1_100, 2, "b")],
+        # window 0 changes, then leaves state with window 1000: the
+        # newest window 10000 puts the horizon at 8000
+        [("k", 200, 3, "c"), ("k", 10_100, 4, "d")],
+        # (150, 5) loses to the (200, 3) survivor while it is held
+        [("k", 150, 5, "e")],
+    ]
+    for i, rows in enumerate(files):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(d / f"b{i}"))
+        time.sleep(1.1)  # FileStreamSource orders by modification time
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/*")
+    )
+    emitted: list = []
+    q = (
+        streaming_compact(stream, window_ms=1_000, state_ttl_ms=2_000)
+        .writeStream.foreachBatch(
+            lambda df, bid: emitted.append(
+                sorted((r["window_start_ms"], r["offset"]) for r in df.collect())
+            )
+        )
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    q.stop()
+    assert [e for e in emitted if e] == [
+        [(0, 1), (1_000, 2)],
+        [(0, 3), (10_000, 4)],
+        [(0, 5)],
+    ]
+
+
 def test_event_time_compact_drops_late_rows(spark, tmp_path):
     """Watermark semantics (SURVEY §2.6 event-time upgrade): a row
     arriving after the watermark passed its window is dropped; the

@@ -753,6 +753,12 @@ def test_streaming_ab_monitor_equals_batch(spark, sf_dir, tmp_path):
             "event_id",
         )
     )
+    # a constant metric: both arms zero-variance, so t/dof are NULL in
+    # both forms instead of a division by zero failing the query
+    const = spark.createDataFrame(
+        [("zz_const", arm, 100, i) for i, arm in enumerate("AABB")], ev.schema
+    )
+    ev = ev.unionByName(const)
     d = tmp_path / "abstream"
     d.mkdir()
     n = ev.count()
@@ -805,7 +811,54 @@ def test_streaming_ab_monitor_equals_batch(spark, sf_dir, tmp_path):
         )
         for r in batch
     }
+    assert last["zz_const"] == (2, 2, 200, 200, None, None)
     assert last == exp
+
+
+def test_ab_monitor_zero_variance_yields_null_t(spark, tmp_path):
+    """Both arms constant (zero variance), split over two microbatches:
+    the streaming readout emits NULL t/dof like the batch welch_ttest,
+    instead of a division by zero killing the query."""
+    from decaton_spark.functions import stats as st
+    from decaton_spark.streaming.stateful import streaming_ab_monitor
+
+    schema = "event_type string, arm string, v long"
+    d = tmp_path / "abconst"
+    for part in (["A", "B"], ["A", "B"]):
+        spark.createDataFrame([("g", arm, 100) for arm in part], schema).coalesce(
+            1
+        ).write.mode("append").parquet(str(d))
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
+        str(d)
+    )
+    rows = []
+    q = (
+        streaming_ab_monitor(stream)
+        .writeStream.queryName("abconst")
+        .foreachBatch(lambda df, bid: rows.append((bid, df.collect())))
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt-abconst"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    q.stop()
+    out = [r for _, rs in sorted(rows) for r in rs]
+    assert len(out) == 2
+    first, last = out
+    assert (first["n_a"], first["n_b"]) == (1, 1)
+    assert first["t_stat"] is None and first["welch_dof"] is None
+    assert (last["n_a"], last["n_b"], last["sum_centi_a"], last["sum_centi_b"]) == (
+        2, 2, 200, 200,
+    )
+    assert last["t_stat"] is None and last["welch_dof"] is None
+    (b,) = st.welch_ttest(
+        spark.read.parquet(str(d)).withColumn("value", F.col("v") / 100.0),
+        group_cols=["event_type"],
+        unit=100,
+    ).collect()
+    assert b["t_stat"] is None and b["welch_dof"] is None
 
 
 def test_streaming_psi_monitor_equals_batch(spark, sf_dir, tmp_path):
@@ -888,3 +941,28 @@ def test_streaming_psi_monitor_equals_batch(spark, sf_dir, tmp_path):
         for r in _ALL_QUERIES["events_psi_drift"].fn(spark, sf_dir).collect()
     }
     assert last == batch
+
+
+def test_cm_bucket_memoization():
+    """``_cm_buckets`` is an lru_cache shared by the quota and
+    heavy-hitter sketches: a hot key costs one md5 set per worker
+    lifetime, not one per row."""
+    import hashlib
+
+    from decaton_spark.streaming import stateful
+
+    stateful._cm_buckets.cache_clear()
+    keys = [f"k{i % 7}" for i in range(10_000)]
+    for k in keys:
+        stateful._cm_buckets(k, 4, 64)
+    info = stateful._cm_buckets.cache_info()
+    # 10k rows, 7 unique keys -> exactly 7 md5-computing misses
+    assert info.misses == 7
+    assert info.hits == 10_000 - 7
+    # same indices as the direct computation
+    for k in set(keys):
+        expect = tuple(
+            int(hashlib.md5(f"d{d}|{k}".encode()).hexdigest()[:8], 16) % 64
+            for d in range(4)
+        )
+        assert stateful._cm_buckets(k, 4, 64) == expect

@@ -7,8 +7,8 @@ produce workers that could not unpickle the Arrow-batched protobuf
 decoder's closure (its ``parse_task_request`` global is serialized by
 module reference): ``ModuleNotFoundError: No module named
 'decaton_spark'`` — reproduced from ``tools/`` before the fix.
-``decaton_spark.__init__._ensure_workers_can_import`` now mirrors
-``_vendor.ensure_protobuf``'s PYTHONPATH append for the package root.
+``decaton_spark.__init__._ensure_workers_can_import`` now appends the
+package root to PYTHONPATH before any SparkSession exists.
 
 The pin runs a real subprocess: cwd is a temp dir, PYTHONPATH is
 scrubbed of the repo root, the driver gets the package via sys.path

@@ -27,7 +27,6 @@ API_SECTIONS = [
     ("Data-quality expectations", "decaton_spark.operators.expectations"),
     ("As-of / range joins", "decaton_spark.operators.asof"),
     ("Time-series", "decaton_spark.operators.timeseries"),
-    ("transformWithStateInPandas forms", "decaton_spark.streaming.tws"),
     ("Dedup", "decaton_spark.functions.dedup"),
     ("Similarity / ANN", "decaton_spark.functions.similarity"),
     ("Embedding quantization", "decaton_spark.functions.quantize"),
