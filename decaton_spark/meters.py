@@ -9,12 +9,19 @@ the same meter names, tags, and kinds — on Spark primitives:
 
 - dataflow counters are computed *inside* the job via
   ``DataFrame.observe`` (no second pass) and folded into meters with
-  :func:`bind_observed`;
+  :func:`bind_observed`. ``Subscription`` does the same for
+  ``tasks.queued``: it is the count of rows that went through the
+  processor's first action over the microbatch frame, so a processor
+  that reads only part of the frame (e.g. through ``limit``) counts
+  only that part. A batch the processor ran no action over (a replay
+  its sink skipped) is counted with one ``count()``;
 - loop-section timers come from ``StreamingQueryProgress.durationMs``
   via :class:`MeterListener` (Spark's microbatch phases mapped onto the
   reference's poll/records/reload/pause/commit sections);
 - partition-state gauges are driven by the subscription loop
   (pause/throttle handling in ``streaming/subscription.py``).
+  ``tasks.pending`` is not: the frame is counted only while the
+  processor runs, so the gauge reads 0 between batches.
 
 Percentile behavior mirrors ``publishPercentiles(0.5, .9, .99, .999)``
 (``Metrics.java:134-137``): timers and summaries keep their samples and

@@ -53,7 +53,9 @@ def rate_limit(
 
 class TokenBucket:
     """Smooth token bucket for the streaming path (runs driver-side in
-    ``foreachBatch`` to pace microbatch admission, mirroring the
+    ``foreachBatch``, charged after each microbatch is processed; a
+    batch beyond the credit leaves negative tokens, a debt the caller
+    sleeps off and the next acquire still owes, mirroring the
     reference's averaging limiter with burst credit,
     ``AveragingRateLimiter.java:83-103``). Plain Python by design —
     it paces batches, it is not on the per-row hot path."""
@@ -66,7 +68,7 @@ class TokenBucket:
 
     def acquire(self, n: int, now: float) -> float:
         """Consume ``n`` permits at time ``now`` (seconds); returns the
-        seconds the caller should sleep before processing."""
+        seconds the caller should sleep to pay off the debt."""
         if self.rate == UNLIMITED:
             return 0.0
         if self.rate == PAUSED:

@@ -15,6 +15,23 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+MAX_DRIVER_MEM_MB = 16 * 1024
+DRIVER_MEM_SHARE = 0.6  # of host memory: leaves room for Python workers
+
+
+def default_driver_memory() -> str:
+    """Driver heap for local mode: 60% of the host's ``MemTotal``, never
+    above 16g, so a smaller host keeps the JVM out of reach of the
+    out-of-memory killer. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, int(total_kb / 1024 * DRIVER_MEM_SHARE))}m"
+
 
 def get_spark(app_name: str = "decaton_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -41,7 +58,7 @@ def get_spark(app_name: str = "decaton_spark", cpus: int | None = None) -> Spark
         # which Spark only reads as long via this legacy flag
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -20,7 +20,8 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from decaton_spark.meters import Metrics
@@ -53,6 +54,16 @@ class Subscription:
     the terminal, possibly side-effecting stage. Transformations before
     it come from the Pipeline (pure DataFrame ops, checked by the batch
     oracle).
+
+    The pipeline runs once per microbatch. With ``meters`` or a rate
+    limit attached, the frame handed to ``process_fn`` carries an
+    ``Observation`` that counts rows during the processor's first
+    action over it; that count feeds ``tasks.queued`` and the token
+    bucket, which is paced after processing (its debt keeps the
+    long-run rate). A processor that reads only part of the frame
+    (e.g. ``limit``) counts only that part; one that runs no action
+    (a replay its sink skipped) is counted with one ``count()``.
+    ``tasks.pending`` is not driven and reads 0 between batches.
     """
 
     def __init__(
@@ -114,18 +125,12 @@ class Subscription:
 
             df = _ik(df, cfg.ignore_keys)
         df = self.pipeline.apply(df)
+        obs = None
         if self._bucket is not None or self.meters is not None:
-            n = df.count()
-            if self.meters is not None:
-                self.meters.thread_util.tasks_queued.increment(n)
-                self.meters.partition_state.tasks_pending.set(n)
-        if self._bucket is not None:
-            wait = self._bucket.acquire(n, time.monotonic())
-            if wait > 0 and wait != float("inf"):
-                slept = min(wait, 10.0)
-                time.sleep(slept)
-                if self.meters is not None:
-                    self.meters.scheduler.partition_throttled_time.record(slept)
+            # count the rows in-job, during the processor's own action:
+            # an unobserved count() here would run the pipeline twice
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
         if self.process_fn is not None:
             started = time.monotonic()
             self.process_fn(df, batch_id)
@@ -134,8 +139,20 @@ class Subscription:
                 self.meters.thread_util.processor_processed_time.record(took)
                 self.meters.task.tasks_process_duration.record(took)
                 self.meters.task.tasks_complete_duration.record(took)
+        if obs is None:
+            return
+        n = _observed_count(self.spark, obs, df)
         if self.meters is not None:
-            self.meters.partition_state.tasks_pending.set(0)
+            self.meters.thread_util.tasks_queued.increment(n)
+        if self._bucket is not None:
+            # paced after processing: the bucket carries the batch's
+            # debt, so sleeping it off here keeps the long-run rate
+            wait = self._bucket.acquire(n, time.monotonic())
+            if wait > 0:
+                slept = min(wait, 10.0)
+                time.sleep(slept)
+                if self.meters is not None:
+                    self.meters.scheduler.partition_throttled_time.record(slept)
 
     def start(self, query_name: str = "decaton-subscription") -> StreamingQuery:
         writer = (
@@ -163,6 +180,20 @@ class Subscription:
     @property
     def last_progress(self):
         return self._query.lastProgress if self._query else None
+
+
+def _observed_count(spark: SparkSession, obs: Observation, df: DataFrame) -> int:
+    """Rows ``obs`` saw on the first action over ``df``. The observation
+    may complete through the listener bus after the action returns, so
+    drain the bus if it is not complete yet; if no action ran (a
+    replayed batch the sink skipped, or no processor), count ``df``
+    itself, which also completes and releases ``obs``."""
+    done = obs._jo.future()
+    if not done.isCompleted():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    if done.isCompleted():
+        return obs.get["n"]
+    return df.count()
 
 
 def idempotent_parquet_sink(path: str):

@@ -107,6 +107,13 @@ def test_token_bucket_smoothing():
     wait = tb.acquire(10, now=0.0)  # immediately over budget
     assert wait == pytest.approx(1.0)
     assert tb.acquire(5, now=10.0) == 0.0  # refilled
+    # debt: an acquire beyond capacity (the Subscription paces after
+    # processing, so a batch may exceed the burst) waits debt/rate, and
+    # the debt carries into the next acquire until the refill covers it
+    tb = TokenBucket(permits_per_second=10, max_burst_seconds=1.0)
+    assert tb.acquire(35, now=0.0) == pytest.approx(2.5)  # owes 25 permits
+    assert tb.acquire(0, now=1.0) == pytest.approx(1.5)  # 10 refilled, owes 15
+    assert tb.acquire(0, now=2.5) == 0.0  # paid off
 
 
 def test_sub_partition_methods(tasks):
@@ -228,10 +235,14 @@ def test_simulated_latency_throughput(spark):
     # 1.4-3.9× under CPU contention and a single contended read flaked
     # the full-suite run at 9,252 tasks/s (passed isolated seconds
     # later) — round 10
+    # Every attempt must still clear a hard 5k tasks/s floor, so a
+    # systemic slowdown fails on its first attempt instead of hiding
+    # behind a lucky one.
     best = None
     for _ in range(3):
         r = run_simulated_latency(tasks, partitions=8, concurrency=128)
         assert r["tasks"] == 20_000
+        assert r["tasks_per_sec"] > 5_000, r
         best = r if best is None or r["tasks_per_sec"] > best["tasks_per_sec"] else best
         if best["tasks_per_sec"] > 10_000:
             break

@@ -6,14 +6,17 @@ the Spark analog of Decaton's rolling-restart chaos test).
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
 from decaton_spark.envelope import events_to_tasks
+from decaton_spark.meters import Metrics
 from decaton_spark.operators import Pipeline, compact_tasks, ignore_keys
 from decaton_spark.sources import load_table
 from decaton_spark.streaming import Subscription, streaming_compact
-from decaton_spark.streaming.subscription import SubscriptionConfig
+from decaton_spark.streaming.subscription import SubscriptionConfig, idempotent_parquet_sink
 
 HOUR_MS = 3_600_000
 
@@ -124,6 +127,96 @@ def test_subscription_paused_then_unpaused_resumes(spark, task_stream_dir):
     sub.stop()
     assert len(polls) >= 3, "pause loop must have re-read the config"
     assert sum(seen) > 0, "held batch must process after unpause"
+
+
+
+def _keyed_files(spark, path, n_files: int, rows_per_file: int):
+    """``n_files`` parquet files of ``rows_per_file`` (id, key) rows,
+    one write each so ``maxFilesPerTrigger=1`` gives one file a batch."""
+    for i in range(n_files):
+        lo = i * rows_per_file
+        (
+            spark.range(lo, lo + rows_per_file, numPartitions=1)
+            .withColumn("key", (F.col("id") % 7).cast("string"))
+            .write.mode("append").parquet(path)
+        )
+    return spark.read.parquet(path).schema
+
+
+def _drain(spark, name, path, schema, tmp_path, rate=-1, **kwargs):
+    """Run a Subscription over ``path``, one file a microbatch, to the end."""
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+    sub = Subscription(
+        spark,
+        stream,
+        config=SubscriptionConfig(
+            rate_limit_per_second=rate,
+            checkpoint_location=str(tmp_path / f"ckpt-{name}"),
+            trigger={"availableNow": True},
+        ),
+        **kwargs,
+    )
+    sub.start(name)
+    sub.await_termination(120)
+    sub.stop()
+
+
+def test_subscription_one_pass_per_microbatch(spark, tmp_path):
+    """With Metrics() attached the pipeline runs once per microbatch:
+    the processor's own write carries the tasks.queued count. A Python
+    UDF filter stage bumps an accumulator once per row it evaluates (a
+    filter, so an extra count() could not prune it away)."""
+    n_files, per_file = 3, 100
+    path = str(tmp_path / "in")
+    schema = _keyed_files(spark, path, n_files, per_file)
+    seen = spark.sparkContext.accumulator(0)
+
+    def bump(key):
+        seen.add(1)
+        return True
+
+    keep = F.udf(bump, "boolean")
+    pipe = Pipeline().then_process(lambda df: df.filter(keep("key")), "bump")
+    sink = str(tmp_path / "sink")
+
+    m = Metrics()
+    _drain(spark, "one-pass-write", path, schema, tmp_path, pipeline=pipe,
+           process_fn=idempotent_parquet_sink(sink), meters=m)
+    assert seen.value == n_files * per_file, "pipeline ran more than once per row"
+    assert m.thread_util.tasks_queued.count == n_files * per_file
+    assert spark.read.parquet(sink).count() == n_files * per_file
+
+    # A fresh checkpoint replays every batch into the same sink, which
+    # skips them all: the processor runs no action, so the count falls
+    # back to one count() of the frame, still one pass per row.
+    m = Metrics()
+    _drain(spark, "one-pass-replay", path, schema, tmp_path, pipeline=pipe,
+           process_fn=idempotent_parquet_sink(sink), meters=m)
+    assert seen.value == 2 * n_files * per_file
+    assert m.thread_util.tasks_queued.count == n_files * per_file
+    assert spark.read.parquet(sink).count() == n_files * per_file
+
+
+def test_subscription_rate_limit_paces_after_processing(spark, tmp_path):
+    """A positive rate through Subscription: the token bucket is charged
+    after each batch is processed and the batch sleeps off its debt, so
+    draining N rows at R/s takes at least (N - R)/R seconds (the bucket
+    starts with one second of burst credit)."""
+    n_files, per_file, rate = 2, 300, 100
+    n = n_files * per_file
+    path = str(tmp_path / "in")
+    schema = _keyed_files(spark, path, n_files, per_file)
+    m = Metrics()
+    started = time.monotonic()
+    _drain(spark, "rate-limited", path, schema, tmp_path,
+           process_fn=idempotent_parquet_sink(str(tmp_path / "sink")), meters=m, rate=rate)
+    elapsed = time.monotonic() - started
+    slack_s = 0.05  # monotonic-clock and sleep granularity
+    assert elapsed >= (n - rate) / rate - slack_s, elapsed
+    throttled = m.scheduler.partition_throttled_time
+    assert throttled.count >= 1
+    assert throttled.total > 0
+    assert m.thread_util.tasks_queued.count == n
 
 
 def _final_survivors(spark, table: str):
