@@ -434,7 +434,6 @@ class MeterListener(StreamingQueryListener):
 
     def __init__(self, metrics: Metrics | None = None) -> None:
         self.metrics = metrics or Metrics()
-        self.progress: list[dict] = []
 
     # -- StreamingQueryListener interface --------------------------------
 
@@ -470,13 +469,6 @@ class MeterListener(StreamingQueryListener):
             bind_observed(
                 self.metrics, obs[TASK_OBSERVATION].asDict(), batch_ts_ms=batch_ms
             )
-        self.progress.append(
-            {
-                "batch_id": p.batchId,
-                "num_input_rows": p.numInputRows,
-                "duration_ms": durations,
-            }
-        )
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass

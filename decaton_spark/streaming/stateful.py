@@ -2,24 +2,25 @@
 
 Decaton's compaction holds ≤1 task per key in memory and flushes the
 survivor when the linger window closes
-(``CompactionProcessor.java:149-227``). Streaming form here:
-``groupByKey(key).applyInPandasWithState`` — state holds the current
-survivor per (key, linger window); every microbatch emits the updated
-survivors (update-mode semantics), so the **last** emission per
-(key, window) equals the batch operator's output. Unlike the
-reference, state is checkpointed (RocksDB/HDFS state store), so a
-restart does not lose the window — strictly stronger than Decaton's
-in-memory window (SURVEY §2.6 "lost on rebalance").
+(``CompactionProcessor.java:149-227``). Streaming form here: a native
+streaming aggregation — the state store holds the ``max_by`` survivor
+per (key, linger window), and every microbatch emits the survivors it
+changed (update-mode semantics), so the **last** emission per
+(key, window) equals the batch operator's output. No Python worker
+runs on this path. Unlike the reference, state is checkpointed
+(RocksDB/HDFS state store), so a restart does not lose the window —
+strictly stronger than Decaton's in-memory window (SURVEY §2.6 "lost
+on rebalance").
 
+Every other operator here is a single ``applyInPandasWithState`` form
+(the ``mapGroupsWithState`` model of the Structured Streaming paper).
 The per-key hash shuffle of groupByKey IS the sub-partitioner (P1);
 rows within a (key, batch) are processed in (partition, offset) order,
 preserving Decaton's PROCESS_ORDERING invariant; keys are independent,
 giving SERIAL_PROCESSING per key.
 
-One state API: every operator here is a single
-``applyInPandasWithState`` form (the ``mapGroupsWithState`` model of
-the Structured Streaming paper). It runs unchanged on either state-store
-provider — the default HDFS-backed store or RocksDB
+All of them run unchanged on either state-store provider — the default
+HDFS-backed store or RocksDB
 (``spark.sql.streaming.stateStore.providerClass``); timers are
 ``GroupStateTimeout.ProcessingTimeTimeout`` emulations, fired by
 no-data microbatches.
@@ -54,13 +55,6 @@ def _cm_buckets(key: str, depth: int, width: int) -> tuple[int, ...]:
     )
 
 
-def _survivor_reduce(pdf: pd.DataFrame, window_ms: int) -> pd.DataFrame:
-    """Batch-local last-wins per (key, window): max (ts, offset)."""
-    pdf = pdf.assign(_win=(pdf["meta_timestamp_millis"] // window_ms) * window_ms)
-    pdf = pdf.sort_values(["_win", "meta_timestamp_millis", "offset"])
-    return pdf.groupby("_win", as_index=False).last()
-
-
 def streaming_compact(
     tasks: DataFrame,
     *,
@@ -70,92 +64,56 @@ def streaming_compact(
 ) -> DataFrame:
     """Streaming T1: emits the current survivor per (key, linger window)
     each time it changes — only the windows CHANGED by a microbatch are
-    emitted (the last emission per window is unchanged; re-emitting all
-    history made per-trigger output grow with query lifetime,
-    self-review r7). Output schema: key, window_start_ms, offset,
-    meta_timestamp_millis, value.
+    emitted, so the last emission per window equals ``compact_tasks``.
+    Output schema: key, window_start_ms, offset, meta_timestamp_millis,
+    value; run it in ``update`` output mode.
 
-    By default every open window stays in state forever — the only
-    late-data-safe choice without an event-time watermark.
-    ``state_ttl_ms`` evicts windows more than that far behind the key's
-    newest window (bounds state under roughly time-ordered arrival; a
-    row later than the TTL re-opens its window fresh — the standard
-    watermark trade).
+    A native streaming aggregation (no Python worker): the state store
+    keeps the ``max_by`` survivor per (key, window), in the order of
+    ``compact_tasks``. Rows are tagged with ``current_timestamp()``,
+    which Spark pins to the microbatch's timestamp (restored from the
+    offset log on replay), and a window is emitted only when its
+    survivor carries this batch's tag — assuming no two microbatches
+    share a timestamp millisecond. A redelivered row that ties the
+    survivor on (ts, offset) may re-emit it. Rows with a null
+    ``meta_timestamp_millis`` are dropped; a null ``value`` stays null.
+
+    Without ``state_ttl_ms`` every window stays in state forever — the
+    only late-data-safe choice. ``state_ttl_ms`` is an event-time
+    watermark on the window start: windows more than that behind the
+    newest window seen (of any key) are evicted and later rows for them
+    are dropped, the late-data policy of ``event_time_compact``.
+
+    Checkpoints of the earlier ``applyInPandasWithState`` form cannot be
+    resumed: the state schema differs.
     """
-    out_schema = (
-        f"{key_col} string, window_start_ms long, offset long, "
-        "meta_timestamp_millis long, value string"
+    rows = tasks.where(F.col("meta_timestamp_millis").isNotNull()).withColumns(
+        {
+            "window_start_ms": F.expr(f"meta_timestamp_millis div {int(window_ms)}")
+            * window_ms,
+            "_at": F.current_timestamp(),
+        }
     )
-    state_schema = "wins array<long>, offs array<long>, tss array<long>, vals array<string>"
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        held: dict[int, tuple[int, int, str]] = {}
-        if state.exists:
-            wins, offs, tss, vals = state.get
-            held = {
-                int(w): (int(o), int(t), str(v))
-                for w, o, t, v in zip(wins, offs, tss, vals)
-            }
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        changed: set[int] = set()
-        if len(batch):
-            reduced = _survivor_reduce(
-                batch[["meta_timestamp_millis", "offset", "value"]], window_ms
-            )
-            for win, off, ts, val in zip(
-                reduced["_win"],
-                reduced["offset"],
-                reduced["meta_timestamp_millis"],
-                reduced["value"],
-            ):
-                win, off, ts = int(win), int(off), int(ts)
-                cur = held.get(win)
-                # last-wins: max (ts, offset), the batch operator's order
-                if cur is None or (ts, off) > (cur[1], cur[0]):
-                    held[win] = (off, ts, str(val))
-                    changed.add(win)
-        if not changed:
-            return
-        # snapshot before eviction so a changed-but-expiring window
-        # still gets its final emission
-        wins_out = sorted(changed)
-        emit = {w: held[w] for w in wins_out}
-        if state_ttl_ms is not None and held:
-            horizon = max(held) - state_ttl_ms
-            held = {w: v for w, v in held.items() if w >= horizon}
-        ordered = sorted(held)
-        state.update(
-            (
-                ordered,
-                [held[w][0] for w in ordered],
-                [held[w][1] for w in ordered],
-                [held[w][2] for w in ordered],
-            )
-        )
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                "window_start_ms": wins_out,
-                "offset": [emit[w][0] for w in wins_out],
-                "meta_timestamp_millis": [emit[w][1] for w in wins_out],
-                "value": [emit[w][2] for w in wins_out],
-            }
-        )
-
+    group = [F.col(key_col), F.col("window_start_ms")]
+    if state_ttl_ms is not None:
+        rows = rows.withColumn(
+            "_win_ts", F.timestamp_millis("window_start_ms")
+        ).withWatermark("_win_ts", f"{int(state_ttl_ms)} milliseconds")
+        group.append(F.col("_win_ts"))
+    survivor = F.max_by(
+        F.struct("offset", "meta_timestamp_millis", "value", "_at"),
+        F.struct("meta_timestamp_millis", "offset"),
+    ).alias("_s")
     return (
-        tasks.select(key_col, "meta_timestamp_millis", "offset", "value")
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        rows.groupBy(*group)
+        .agg(survivor)
+        .where(F.col("_s._at") == F.current_timestamp())
+        .select(
+            key_col,
+            "window_start_ms",
+            "_s.offset",
+            "_s.meta_timestamp_millis",
+            "_s.value",
         )
     )
 

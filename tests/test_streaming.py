@@ -341,11 +341,101 @@ def _task_rows(spark):
     )
 
 
-def test_streaming_compact_plans_apply_in_pandas_with_state(spark):
-    """Every stateful builder has one form: the applyInPandasWithState
-    plan, whatever state-store provider the session configures."""
-    plan = streaming_compact(_task_rows(spark))._jdf.queryExecution().analyzed().toString()
-    assert "FlatMapGroupsInPandasWithState" in plan
+def _file_stream(spark, d, batches, schema):
+    """One parquet file per microbatch, in order (FileStreamSource
+    orders files by modification time)."""
+    d.mkdir()
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(d / f"b{i}"))
+        time.sleep(1.1)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/*")
+    )
+
+
+TASK_SCHEMA = "key string, meta_timestamp_millis long, offset long, value string"
+T0 = 1_000_000  # away from epoch 0, which sits on the initial watermark
+
+
+def _run_compact(stream, ckpt, **kw):
+    """Run ``streaming_compact`` to the end of its input; returns the
+    query (still queryable) and the rows each microbatch emitted."""
+    emitted: list = []
+    q = (
+        streaming_compact(stream, **kw)
+        .writeStream.foreachBatch(
+            lambda df, bid: emitted.append(sorted(tuple(r) for r in df.collect()))
+        )
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    return q, emitted
+
+
+def test_streaming_compact_plans_native_state_aggregate(spark, tmp_path):
+    """The compaction is a native stateful aggregation: the executed
+    plan saves to the state store and holds no Python node."""
+    stream = _file_stream(spark, tmp_path / "src", [_task_rows(spark).collect()], TASK_SCHEMA)
+    q, _ = _run_compact(stream, str(tmp_path / "ck"), window_ms=HOUR_MS)
+    try:
+        plan = q._jsq.explainInternal(True)
+        ops = [op.operatorName for op in q.lastProgress.stateOperators]
+    finally:
+        q.stop()
+    assert "StateStoreSave" in plan
+    assert ops == ["stateStoreSave"]
+    for node in ("Python", "InPandas", "ArrowEval"):
+        assert node not in plan, node
+
+
+def test_streaming_compact_null_payloads_and_timestamps(spark, tmp_path):
+    """A null survivor value is emitted as null (as ``compact_tasks``
+    gives), not as the string 'None' and not back-filled from an older
+    row of the same batch; a row with a null timestamp emits nothing."""
+    rows = [
+        ("lone", T0 + 100, 1, None),
+        ("pair", T0 + 100, 2, "old"),
+        ("pair", T0 + 200, 3, None),  # newer, null payload: wins
+        ("nots", None, 4, "x"),
+    ]
+    stream = _file_stream(spark, tmp_path / "src", [rows], TASK_SCHEMA)
+    q, emitted = _run_compact(stream, str(tmp_path / "ck"), window_ms=1_000)
+    q.stop()
+    assert emitted == [
+        [("lone", T0, 1, T0 + 100, None), ("pair", T0, 3, T0 + 200, None)]
+    ]
+    batch = compact_tasks(spark.createDataFrame(rows[:3], TASK_SCHEMA), linger=None)
+    assert sorted((r["key"], r["value"]) for r in batch.collect()) == [
+        ("lone", None),
+        ("pair", None),
+    ]
+
+
+def test_streaming_compact_emits_only_changed_windows(spark, tmp_path):
+    """Only windows whose survivor changed in a microbatch are emitted:
+    a batch whose rows all lose emits nothing, and a winning row is
+    emitted exactly once."""
+    batches = [
+        [("k", T0 + 500, 10, "a")],
+        # earlier ts; same ts with a lower offset: both lose
+        [("k", T0 + 400, 11, "b"), ("k", T0 + 500, 9, "c")],
+        [("k", T0 + 600, 12, "d"), ("k", T0 + 100, 13, "e")],
+        [("k", T0 + 550, 14, "f")],
+    ]
+    stream = _file_stream(spark, tmp_path / "src", batches, TASK_SCHEMA)
+    q, emitted = _run_compact(stream, str(tmp_path / "ck"), window_ms=1_000)
+    q.stop()
+    assert emitted == [
+        [("k", T0, 10, T0 + 500, "a")],
+        [],
+        [("k", T0, 12, T0 + 600, "d")],
+        [],
+    ]
 
 
 def test_streaming_compact_runs_on_rocksdb(spark, tmp_path):
@@ -392,51 +482,38 @@ def test_streaming_compact_runs_on_rocksdb(spark, tmp_path):
 
 
 def test_streaming_compact_state_ttl_evicts_behind_horizon(spark, tmp_path):
-    """``state_ttl_ms`` evicts windows behind the key's newest window
-    minus the TTL, AFTER their final emission: a later row for an
-    evicted window re-opens it fresh, even one that would have lost to
-    the evicted survivor."""
-    import time
-
-    d = tmp_path / "stream"
-    d.mkdir()
-    schema = "key string, meta_timestamp_millis long, offset long, value string"
-    files = [
-        [("k", 100, 1, "a"), ("k", 1_100, 2, "b")],
-        # window 0 changes, then leaves state with window 1000: the
-        # newest window 10000 puts the horizon at 8000
-        [("k", 200, 3, "c"), ("k", 10_100, 4, "d")],
-        # (150, 5) loses to the (200, 3) survivor while it is held
-        [("k", 150, 5, "e")],
+    """``state_ttl_ms`` is an event-time watermark on the window start:
+    once the newest window seen moves more than the TTL ahead, older
+    windows are evicted AFTER their final emission — those of a key that
+    receives no more rows too — and a later row for an evicted window
+    is dropped, even one that would have won."""
+    batches = [
+        [("k", T0 + 100, 1, "a"), ("k", T0 + 1_100, 2, "b"), ("q", T0 + 500, 3, "q")],
+        # window T0 changes; window T0 + 10000 puts the watermark at
+        # T0 + 8000, which evicts every other window in the next batch
+        [("k", T0 + 200, 4, "c"), ("k", T0 + 10_100, 5, "d")],
+        [("k", T0 + 10_900, 6, "e")],
+        # (T0 + 900, 7) would beat the evicted (T0 + 200, 4): dropped
+        [("k", T0 + 900, 7, "f")],
     ]
-    for i, rows in enumerate(files):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(d / f"b{i}"))
-        time.sleep(1.1)  # FileStreamSource orders by modification time
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*")
+    stream = _file_stream(spark, tmp_path / "src", batches, TASK_SCHEMA)
+    q, emitted = _run_compact(
+        stream, str(tmp_path / "ck"), window_ms=1_000, state_ttl_ms=2_000
     )
-    emitted: list = []
-    q = (
-        streaming_compact(stream, window_ms=1_000, state_ttl_ms=2_000)
-        .writeStream.foreachBatch(
-            lambda df, bid: emitted.append(
-                sorted((r["window_start_ms"], r["offset"]) for r in df.collect())
-            )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
+    try:
+        ops = [
+            p.stateOperators[0] for p in q.recentProgress if p.numInputRows > 0
+        ]
+    finally:
+        q.stop()
     assert [e for e in emitted if e] == [
-        [(0, 1), (1_000, 2)],
-        [(0, 3), (10_000, 4)],
-        [(0, 5)],
+        [("k", T0, 1, T0 + 100, "a"), ("k", T0 + 1_000, 2, T0 + 1_100, "b"),
+         ("q", T0, 3, T0 + 500, "q")],
+        [("k", T0, 4, T0 + 200, "c"), ("k", T0 + 10_000, 5, T0 + 10_100, "d")],
+        [("k", T0 + 10_000, 6, T0 + 10_900, "e")],
     ]
+    assert [op.numRowsTotal for op in ops] == [3, 4, 1, 1]
+    assert [op.numRowsDroppedByWatermark for op in ops] == [0, 0, 0, 1]
 
 
 def test_event_time_compact_drops_late_rows(spark, tmp_path):
