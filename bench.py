@@ -399,7 +399,7 @@ def main() -> None:
     # position 1 where a quiet probe measured 0.599 s). Warming only
     # the first op proved insufficient once the round-8 tier rotation
     # removed the task ops from the tier loop (they used to arrive
-    # pre-warmed by it): t1_compaction_hash measured 0.817 s when
+    # pre-warmed by it): one compaction op measured 0.817 s when
     # first-ish and 0.421 s when last in the same session. One full
     # unmeasured pass costs ~5-10 s and makes the measured walls
     # position-independent steady-state.

@@ -1,5 +1,5 @@
 from decaton_spark.operators.batching import batch_tasks, batch_stats
-from decaton_spark.operators.compaction import compact_tasks, compact_tasks_hash
+from decaton_spark.operators.compaction import compact_tasks
 from decaton_spark.operators.filters import discard_invalid, ignore_keys, project_task_view
 from decaton_spark.operators.partitioner import sub_partition
 from decaton_spark.operators.pipeline import Pipeline
@@ -18,7 +18,6 @@ __all__ = [
     "batch_stats",
     "batch_tasks",
     "compact_tasks",
-    "compact_tasks_hash",
     "corpus_merge",
     "corpus_merge_neardup",
     "discard_invalid",

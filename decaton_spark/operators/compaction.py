@@ -43,60 +43,29 @@ def compact_tasks(
     reference collapses to this for any total order; EITHER is made
     deterministic by the offset tie-break callers should include).
     ``linger=None`` compacts globally per key (one survivor per key).
-    """
-    out_cols = list(df.columns)
-    order_struct = F.struct(*[F.col(c) if isinstance(c, str) else c for c in order_by])
-    survivor = F.max_by(F.struct(*out_cols), order_struct).alias("survivor")
 
-    group: list[Column] = [F.col(c) for c in key_cols]
+    The survivor struct holds only the columns outside ``key_cols``;
+    the key columns are read from the group, so a streaming caller's
+    state does not store them twice. Output columns keep ``df.columns``
+    order, plus ``linger_window`` when ``keep_window=True``.
+
+    This is the only survivor election in the package:
+    ``streaming_compact`` and ``event_time_compact`` run it on a stream.
+    """
+    keys = list(key_cols)
+    carried = [c for c in df.columns if c not in keys]
+    order_struct = F.struct(*[F.col(c) if isinstance(c, str) else c for c in order_by])
+    survivor = F.max_by(F.struct(*carried), order_struct).alias("survivor")
+
+    group: list[Column] = [F.col(c) for c in keys]
     if linger is not None:
         group.append(F.window(F.col(ts_col), linger).alias("linger_window"))
 
     agg = df.groupBy(*group).agg(survivor)
-    cols = [F.col(f"survivor.{c}").alias(c) for c in out_cols]
+    cols = [
+        F.col(c) if c in keys else F.col(f"survivor.{c}").alias(c)
+        for c in df.columns
+    ]
     if keep_window and linger is not None:
         cols.append(F.col("linger_window"))
     return agg.select(*cols)
-
-
-def compact_tasks_hash(
-    df: DataFrame,
-    *,
-    key_cols: Sequence[str] = ("key",),
-    ts_col: str = "timestamp",
-    linger: str | None = "1 hour",
-    order_ts: str = "meta_timestamp_millis",
-    order_offset: str = "offset",
-) -> DataFrame:
-    """Sort-free compaction: the HashAggregate alternative to
-    ``compact_tasks``.
-
-    ``max_by(struct, struct)`` carries the payload in its aggregation
-    buffer, and struct/string buffers force SortAggregate (per-partition
-    sorts on both sides of the exchange). This variant aggregates ONLY a
-    packed fixed-width DECIMAL — ``ts * 2^62 + offset`` (offset < 2^62:
-    a Kafka offset always is; DECIMAL(38,0) holds 2^41-ms timestamps ×
-    2^62 with room to spare) — which IS hash-aggregable, then one
-    equi-join on (group, packed) recovers the survivor row. The trade:
-    an extra join (broadcast-able: one row per group) for zero sorts —
-    worth it when compaction input is too wide or too big to sort-spill
-    gracefully; same survivors bit-for-bit (both orderings are the
-    lexicographic (ts, offset) max, offsets unique).
-    """
-    two62 = F.lit(2**62).cast("decimal(38,0)")
-    packed = (
-        F.col(order_ts).cast("decimal(38,0)") * two62
-        + F.col(order_offset).cast("decimal(38,0)")
-    ).alias("_packed")
-
-    group_names = list(key_cols)
-    base = df.withColumn("_packed", packed)
-    if linger is not None:
-        base = base.withColumn(
-            "_lw", F.window(F.col(ts_col), linger)["start"]
-        )
-        group_names.append("_lw")
-
-    winners = base.groupBy(*group_names).agg(F.max("_packed").alias("_packed"))
-    out = base.join(winners, [*group_names, "_packed"])
-    return out.select(*df.columns)

@@ -151,39 +151,6 @@ def t1_compaction_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "t1_compaction_hash",
-    f"""
-    WITH {TASKS_CTE},
-    ranked AS (
-        SELECT key, "offset", meta_timestamp_millis,
-               row_number() OVER (PARTITION BY key
-                   ORDER BY meta_timestamp_millis DESC, "offset" DESC) AS rn
-        FROM tasks)
-    SELECT key, "offset", meta_timestamp_millis FROM ranked WHERE rn = 1
-    """,
-)
-def t1_compaction_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1 compaction via the sort-free HashAggregate variant
-    (``compact_tasks_hash``): the survivor election aggregates only a
-    packed fixed-width DECIMAL (ts·2^62 + offset) so the aggregate
-    hash-combines instead of sort-spilling, then one equi-join on
-    (key, packed max) recovers the survivor row — the plan to pick
-    when compaction input is too wide to sort gracefully at scale.
-    Same survivors bit-for-bit as ``t1_compaction_global`` (shared
-    oracle): both orderings are the lexicographic (ts, offset) max and
-    offsets are unique.
-
-    Reference: CompactionProcessor.process()
-    (processor/.../processors/CompactionProcessor.java:184-227).
-    """
-    from decaton_spark.operators.compaction import compact_tasks_hash
-
-    tasks = _tasks(spark, sf_dir)
-    out = compact_tasks_hash(tasks, linger=None)
-    return out.select("key", "offset", "meta_timestamp_millis")
-
-
-@register(
     "f1_ignore_keys",
     f"""
     WITH {TASKS_CTE}

@@ -6,20 +6,22 @@ windows are wall-clock timers and there is no late-data story
 event-time watermarking is the native upgrade: windows are keyed by
 the *task* timestamp, late rows beyond the watermark are dropped
 deterministically, and append-mode emits each (key, window) exactly
-once when the watermark passes the window end — i.e. the streaming
-result converges to the batch ``compact_tasks`` output over the
-non-late rows.
+once when the watermark passes the window end. ``event_time_compact``
+is the batch ``compact_tasks`` called on the watermarked stream, so its
+output equals the batch output over the non-late rows.
 
-Scale: identical plan to the batch aggregation (hash partial agg →
-shuffle on (key, window) → final agg) plus per-window state in the
-checkpointed state store; state size is O(open windows × keys), and
-the watermark bounds "open".
+Scale: the batch aggregation's plan (partial agg → shuffle on
+(key, window) → final agg) plus per-window state in the checkpointed
+state store; state size is O(open windows × keys), and the watermark
+bounds "open".
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from decaton_spark.operators.compaction import compact_tasks
 
 
 def event_time_compact(
@@ -30,30 +32,28 @@ def event_time_compact(
     ts_col: str = "timestamp",
     key_col: str = "key",
 ) -> DataFrame:
-    """Event-time T1 compaction: last-wins survivor per (key, tumbling
-    linger window) with late rows beyond the watermark dropped.
+    """Event-time T1 compaction: ``compact_tasks`` on the watermarked
+    stream — last-wins survivor per (key, tumbling linger window), late
+    rows beyond the watermark dropped.
 
     Output: key, window_start_ms, offset, meta_timestamp_millis, value
     — one row per closed (key, window) in append mode.
+
+    The state holds ``ts_col`` in the survivor as well, so checkpoints
+    written by the earlier form of this operator (whose survivor held
+    only offset, meta_timestamp_millis and value) cannot be resumed.
     """
-    survivor = F.max_by(
-        F.struct("offset", "meta_timestamp_millis", "value"),
-        F.struct("meta_timestamp_millis", "offset"),
-    ).alias("survivor")
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.col(key_col),
-            F.window(F.col(ts_col), linger).alias("linger_window"),
-        )
-        .agg(survivor)
-        .select(
-            key_col,
-            F.unix_millis("linger_window.start").alias("window_start_ms"),
-            F.col("survivor.offset").alias("offset"),
-            F.col("survivor.meta_timestamp_millis").alias("meta_timestamp_millis"),
-            F.col("survivor.value").alias("value"),
-        )
+    rows = stream.select(
+        key_col, ts_col, "offset", "meta_timestamp_millis", "value"
+    ).withWatermark(ts_col, watermark)
+    return compact_tasks(
+        rows, key_cols=[key_col], ts_col=ts_col, linger=linger, keep_window=True
+    ).select(
+        key_col,
+        F.unix_millis("linger_window.start").alias("window_start_ms"),
+        "offset",
+        "meta_timestamp_millis",
+        "value",
     )
 
 

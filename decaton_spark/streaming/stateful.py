@@ -2,22 +2,24 @@
 
 Decaton's compaction holds ≤1 task per key in memory and flushes the
 survivor when the linger window closes
-(``CompactionProcessor.java:149-227``). Streaming form here: a native
-streaming aggregation — the state store holds the ``max_by`` survivor
-per (key, linger window), and every microbatch emits the survivors it
-changed (update-mode semantics), so the **last** emission per
-(key, window) equals the batch operator's output. No Python worker
-runs on this path. Unlike the reference, state is checkpointed
-(RocksDB/HDFS state store), so a restart does not lose the window —
-strictly stronger than Decaton's in-memory window (SURVEY §2.6 "lost
-on rebalance").
+(``CompactionProcessor.java:149-227``). Streaming form here: the batch
+``compact_tasks`` called on the stream — a native streaming
+aggregation whose state store holds the ``max_by`` survivor per
+(key, linger window); every microbatch emits the survivors it changed
+(update-mode semantics), so the **last** emission per (key, window)
+equals the batch operator's output. No Python worker runs on this
+path. Unlike the reference, state is checkpointed (RocksDB/HDFS state
+store), so a restart does not lose the window — strictly stronger
+than Decaton's in-memory window (SURVEY §2.6 "lost on rebalance").
 
-Every other operator here is a single ``applyInPandasWithState`` form
-(the ``mapGroupsWithState`` model of the Structured Streaming paper).
-The per-key hash shuffle of groupByKey IS the sub-partitioner (P1);
-rows within a (key, batch) are processed in (partition, offset) order,
-preserving Decaton's PROCESS_ORDERING invariant; keys are independent,
-giving SERIAL_PROCESSING per key.
+The A/B monitor is likewise its batch operator (``welch_ttest``) run
+on the stream. The other operators here are each a single
+``applyInPandasWithState`` form (the ``mapGroupsWithState`` model of
+the Structured Streaming paper). The per-key hash shuffle of
+groupByKey IS the sub-partitioner (P1); rows within a (key, batch) are
+processed in (partition, offset) order, preserving Decaton's
+PROCESS_ORDERING invariant; keys are independent, giving
+SERIAL_PROCESSING per key.
 
 All of them run unchanged on either state-store provider — the default
 HDFS-backed store or RocksDB
@@ -35,6 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from decaton_spark.functions.stats import welch_ttest
+from decaton_spark.operators.compaction import compact_tasks
 
 
 @functools.lru_cache(maxsize=65536)
@@ -68,13 +73,13 @@ def streaming_compact(
     Output schema: key, window_start_ms, offset, meta_timestamp_millis,
     value; run it in ``update`` output mode.
 
-    A native streaming aggregation (no Python worker): the state store
-    keeps the ``max_by`` survivor per (key, window), in the order of
-    ``compact_tasks``. Rows are tagged with ``current_timestamp()``,
-    which Spark pins to the microbatch's timestamp (restored from the
-    offset log on replay), and a window is emitted only when its
-    survivor carries this batch's tag — assuming no two microbatches
-    share a timestamp millisecond. A redelivered row that ties the
+    It calls ``compact_tasks`` grouped by (key, window_start_ms): a
+    native streaming aggregation (no Python worker) whose state store
+    keeps the ``max_by`` survivor per (key, window). Rows are tagged
+    with ``current_timestamp()``, which Spark pins to the microbatch's
+    timestamp (restored from the offset log on replay), and a window is
+    emitted only when its survivor carries this batch's tag — assuming
+    no two microbatches share a timestamp millisecond. A redelivered row that ties the
     survivor on (ts, offset) may re-emit it. Rows with a null
     ``meta_timestamp_millis`` are dropped; a null ``value`` stays null.
 
@@ -85,36 +90,29 @@ def streaming_compact(
     are dropped, the late-data policy of ``event_time_compact``.
 
     Checkpoints of the earlier ``applyInPandasWithState`` form cannot be
-    resumed: the state schema differs.
+    resumed: the state schema differs. Checkpoints of this native form
+    resume unchanged (the state holds the same keys and survivor).
     """
-    rows = tasks.where(F.col("meta_timestamp_millis").isNotNull()).withColumns(
-        {
-            "window_start_ms": F.expr(f"meta_timestamp_millis div {int(window_ms)}")
-            * window_ms,
-            "_at": F.current_timestamp(),
-        }
+    rows = tasks.where(F.col("meta_timestamp_millis").isNotNull()).select(
+        key_col,
+        (F.expr(f"meta_timestamp_millis div {int(window_ms)}") * window_ms).alias(
+            "window_start_ms"
+        ),
+        "offset",
+        "meta_timestamp_millis",
+        "value",
+        F.current_timestamp().alias("_at"),
     )
-    group = [F.col(key_col), F.col("window_start_ms")]
+    keys = [key_col, "window_start_ms"]
     if state_ttl_ms is not None:
         rows = rows.withColumn(
             "_win_ts", F.timestamp_millis("window_start_ms")
         ).withWatermark("_win_ts", f"{int(state_ttl_ms)} milliseconds")
-        group.append(F.col("_win_ts"))
-    survivor = F.max_by(
-        F.struct("offset", "meta_timestamp_millis", "value", "_at"),
-        F.struct("meta_timestamp_millis", "offset"),
-    ).alias("_s")
+        keys.append("_win_ts")
     return (
-        rows.groupBy(*group)
-        .agg(survivor)
-        .where(F.col("_s._at") == F.current_timestamp())
-        .select(
-            key_col,
-            "window_start_ms",
-            "_s.offset",
-            "_s.meta_timestamp_millis",
-            "_s.value",
-        )
+        compact_tasks(rows, key_cols=keys, linger=None)
+        .where(F.col("_at") == F.current_timestamp())
+        .select(key_col, "window_start_ms", "offset", "meta_timestamp_millis", "value")
     )
 
 
@@ -940,88 +938,29 @@ def streaming_ab_monitor(
     arm_col: str = "arm",
     value_centi_col: str = "v",
 ) -> DataFrame:
-    """Continuous A/B readout: the streaming twin of
-    ``functions.stats.welch_ttest``. State per group is the six exact
-    integer sufficient statistics (n, Σv, Σv² per arm — O(1) per group
-    at any traffic volume); each microbatch folds its rows in
-    (order-free integer sums, so ANY microbatch split yields the same
-    state) and emits the current t/dof through the identical canonical
-    double formula the batch operator uses — the final emission per
-    group is bit-equal to the batch Welch over the same rows (pinned
-    in the invariant suite).
+    """Continuous A/B readout: the batch ``functions.stats.welch_ttest``
+    run on a stream (``unit=1``: values are already integer centi
+    ticks). Its state per group is the six exact integer sufficient
+    statistics (n, Σv, Σv² per arm — O(1) per group at any traffic
+    volume), order-free sums, so ANY microbatch split yields the same
+    state, and each emission evaluates the batch operator's formula —
+    the final emission per group equals the batch Welch over the same
+    rows (pinned in the invariant suite). As in the batch form, any arm
+    other than ``'A'`` counts as B.
 
     This is how an experiment dashboard actually consumes the test: a
     per-trigger readout, not a batch query rerun over history.
 
     Emits (group, n_a, n_b, sum_centi_a, sum_centi_b, t_stat,
-    welch_dof) per group per microbatch that touches it.
+    welch_dof) per group per microbatch that touches it; run it in
+    ``update`` output mode.
     """
-    import math
-
-    out_schema = (
-        f"{group_col} string, n_a long, n_b long,"
-        " sum_centi_a long, sum_centi_b long,"
-        " t_stat double, welch_dof double"
-    )
-    state_schema = "na long, nb long, sa long, sb long, qa long, qb long"
-
-    def update(pkey, pdfs, state: GroupState):
-        na, nb, sa, sb, qa, qb = state.get if state.exists else (0, 0, 0, 0, 0, 0)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        a = batch[batch[arm_col] == "A"][value_centi_col]
-        b = batch[batch[arm_col] == "B"][value_centi_col]
-        na, nb = na + len(a), nb + len(b)
-        sa, sb = sa + int(a.sum()), sb + int(b.sum())
-        qa, qb = qa + int((a * a).sum()), qb + int((b * b).sum())
-        state.update((na, nb, sa, sb, qa, qb))
-        t = dof = se2 = None
-        if na >= 2 and nb >= 2:
-            # the batch operator's formula, double-op for double-op
-            dna, dnb = float(na), float(nb)
-            dsa, dsb, dqa, dqb = float(sa), float(sb), float(qa), float(qb)
-            va = (dna * dqa - dsa * dsa) / (dna * (dna - 1))
-            vb = (dnb * dqb - dsb * dsb) / (dnb * (dnb - 1))
-            se2 = va / dna + vb / dnb
-            if se2 <= 0.0:
-                # both arms zero-variance (constant metric): the batch
-                # welch_ttest reports NULL t/dof here; raising would
-                # kill the streaming query on one degenerate group
-                t = dof = None
-                se2 = None
-        if se2 is not None:
-            t = _round_half_away((dsa / dna - dsb / dnb) / math.sqrt(se2) * 1e6) / 1e6
-            dof = _round_half_away(
-                (se2 * se2)
-                / (
-                    (va / dna) * (va / dna) / (dna - 1)
-                    + (vb / dnb) * (vb / dnb) / (dnb - 1)
-                )
-                * 1e4
-            ) / 1e4
-        yield pd.DataFrame(
-            {
-                group_col: [pkey[0]],
-                "n_a": [na],
-                "n_b": [nb],
-                "sum_centi_a": [sa],
-                "sum_centi_b": [sb],
-                "t_stat": [t],
-                "welch_dof": [dof],
-            }
-        )
-
-    return (
-        events.select(group_col, arm_col, value_centi_col)
-        .groupBy(group_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return welch_ttest(
+        events,
+        group_cols=[group_col],
+        arm_col=arm_col,
+        value_col=value_centi_col,
+        unit=1,
     )
 
 

@@ -42,7 +42,6 @@ class SubscriptionConfig:
 
     ignore_keys: list[str] = field(default_factory=list)  # decaton.ignore.keys
     rate_limit_per_second: int = -1  # decaton.processing.rate.per.partition
-    max_pending_records: int = 10_000  # → maxOffsetsPerTrigger / maxFilesPerTrigger
     checkpoint_location: str | None = None
     trigger: dict = field(default_factory=lambda: {"availableNow": True})
 

@@ -73,6 +73,57 @@ def test_compaction_custom_compactor(tasks):
     assert joined.filter(F.col("meta_timestamp_millis") != F.col("m")).count() == 0
 
 
+def test_compact_tasks_key_columns_come_from_the_group(spark):
+    """Two key columns, one of them null on a third of the rows: the
+    survivor per (k1, k2[, linger window]) equals a ``row_number()``
+    reference, the key columns keep their ``df.columns`` position (they
+    are read from the group, not the survivor) and ``keep_window=True``
+    appends ``linger_window``."""
+    import datetime as dt
+
+    from pyspark.sql import Window
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (
+            f"v{i}",
+            [None, "a", "b"][i % 3],
+            t0 + dt.timedelta(minutes=7 * i),
+            i % 2,
+            (i * 37) % 11,  # ties on the timestamp, broken by offset
+            i,
+        )
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "value string, k1 string, timestamp timestamp, k2 long,"
+        " meta_timestamp_millis long, offset long",
+    )
+    order = [F.col("meta_timestamp_millis").desc(), F.col("offset").desc()]
+    for linger, keep in ((None, False), ("1 hour", True)):
+        out = compact_tasks(
+            df, key_cols=["k1", "k2"], linger=linger, keep_window=keep
+        )
+        base = df
+        extra = []
+        if linger is not None:
+            base = df.withColumn("linger_window", F.window("timestamp", linger))
+            extra = ["linger_window"]
+        w = Window.partitionBy("k1", "k2", *extra).orderBy(*order)
+        want = (
+            base.withColumn("_rn", F.row_number().over(w))
+            .where("_rn = 1")
+            .select(*df.columns, *extra)
+        )
+        assert out.columns == df.columns + extra
+        got = sorted(map(tuple, out.collect()), key=repr)
+        exp = sorted(map(tuple, want.collect()), key=repr)
+        assert got == exp, linger
+        assert any(r[1] is None for r in got), "null-key group lost"
+    assert len(exp) > 6, "windows must split the groups"
+
+
 def test_retry_max_retries_drops(tasks):
     bumped = tasks.withColumn("meta_retry_count", F.lit(3).cast("long"))
     out = retry_tasks(bumped, F.lit(True), max_retries=3)
@@ -498,29 +549,6 @@ def test_simulated_latency_flat_wrt_io_latency(spark):
         partitions=8, concurrency=128, io_mode="async",
     )
     assert slow["tasks_per_sec"] > 0.4 * fast["tasks_per_sec"], (fast, slow)
-
-
-def test_compact_tasks_hash_matches_default(tasks):
-    """The sort-free (packed-decimal + join-back) compaction must pick
-    exactly the same survivors as the max_by form, windowed and
-    global, and must plan as HashAggregate with no SortAggregate."""
-    from decaton_spark.operators.compaction import compact_tasks, compact_tasks_hash
-
-    for linger in ("1 hour", None):
-        a = compact_tasks(tasks, linger=linger)
-        b = compact_tasks_hash(tasks, linger=linger)
-        cols = ["key", "offset", "meta_timestamp_millis"]
-        sa = sorted(map(tuple, a.select(cols).collect()))
-        sb = sorted(map(tuple, b.select(cols).collect()))
-        assert sa == sb, f"linger={linger}: survivor mismatch"
-    p = (
-        compact_tasks_hash(tasks, linger=None)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SortAggregate" not in p
-    assert "HashAggregate" in p
 
 
 def test_exact_substring_stats_semantics(spark):

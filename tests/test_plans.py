@@ -21,6 +21,7 @@ QUERIES = {**QUERIES, **EXTRA_QUERIES}  # plan shape is graded for both tiers
 
 
 from tests.conftest import plan_of  # noqa: E402  (shared plan helper)
+from tests.test_window_audit import checkpoint_passthrough  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -535,17 +536,6 @@ def test_winsorize_broadcasts_quantiles(spark, sf_dir):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
-def test_compaction_hash_variant_no_sort_aggregate(spark, sf_dir):
-    """t1_compaction_hash exists to avoid SortAggregate: the survivor
-    election aggregates a packed fixed-width DECIMAL (hash-aggregable)
-    and the recovery join must be a hash join, never a sorted one."""
-    df = QUERIES["t1_compaction_hash"].fn(spark, sf_dir)
-    p = plan_of(df)
-    assert "SortAggregate" not in p, "packed-decimal max must hash-aggregate"
-    assert "HashAggregate" in p
-    assert "SortMergeJoin" not in p, "one-row-per-group recovery join must hash"
-
-
 def test_hybrid_semantic_tower_is_ivf_probe_join(spark, sf_dir):
     """hybrid_search_rrf's semantic tower must be the IVF shape: a
     broadcast equi-join of corpus cells against the exploded probe
@@ -1016,15 +1006,14 @@ def test_exact_global_ntile_no_single_partition_sort(spark, sf_dir):
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    p = plan_of(
-        exact_global_ntile(
+    with checkpoint_passthrough():
+        ranked = exact_global_ntile(
             per_user,
             n_tiles=10,
             order_cols=[F.col("n_events").desc(), F.col("user_id")],
             out_col="decile",
-            stage=False,
         )
-    )
+    p = plan_of(ranked)
     assert "ntile(" not in p
     assert "rangepartitioning" in p.lower(), "lost the parallel range sort"
     # the ONLY global sort allowed is the bounded per-partition-counts
@@ -1056,33 +1045,6 @@ def test_exact_global_ntile_matches_ntile(spark):
         w = {r["id"]: r["tile"] for r in want.collect()}
         assert g == w, (n_rows, n_tiles, n_parts)
 
-
-
-def test_unstaged_knob_hard_fails_outside_pytest(spark, monkeypatch):
-    """stage=False is a plan-inspection-only knob: outside pytest it
-    must raise rather than silently risk wrong results (the
-    nondeterministic mono-id/partition-id column would be evaluated
-    independently per consumer branch — VERDICT r5 'What's wrong' #1)."""
-    import pytest as _pytest
-    import pyspark.sql.functions as F
-
-    from decaton_spark.functions.stats import (
-        exact_global_ntile,
-        global_running_sum,
-    )
-
-    df = spark.range(4).withColumn("v", F.col("id") * 2)
-    monkeypatch.delenv("PYTEST_CURRENT_TEST", raising=False)
-    with _pytest.raises(ValueError, match="plan-inspection-only"):
-        exact_global_ntile(
-            df, n_tiles=2, order_cols=[F.col("id")], out_col="t",
-            stage=False,
-        )
-    with _pytest.raises(ValueError, match="plan-inspection-only"):
-        global_running_sum(
-            df, order_cols=[F.col("id")], value_col="v", out_col="c",
-            stage=False,
-        )
 
 
 def test_global_running_sum_matches_window(spark):
@@ -1146,15 +1108,14 @@ def test_abc_classification_no_single_partition_sweep(spark, sf_dir):
         .groupBy(F.col("l_partkey").alias("partkey"))
         .agg(F.sum(F.lit(1)).alias("rev"))
     )
-    p = plan_of(
-        global_running_sum(
+    with checkpoint_passthrough():
+        cum = global_running_sum(
             rev,
             order_cols=[F.col("rev").desc(), F.col("partkey")],
             value_col="rev",
             out_col="cum",
-            stage=False,
         )
-    )
+    p = plan_of(cum)
     assert "rangepartitioning" in p.lower(), "lost the parallel range sort"
     assert p.lower().count("singlepartition") <= 1
 

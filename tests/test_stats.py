@@ -215,34 +215,13 @@ def test_theilsen_ignores_outlier_least_squares_cannot(spark):
     )
     assert out["median_slope"] == slopes[(45 + 1) // 2 - 1][0]
 
-    # stage=False (ADVICE r6 escape hatch): plan-only composition skips
-    # the localCheckpoint; results are identical (the bucketed series is
-    # a deterministic aggregation — recomputed, not wrong). Intercept
-    # localCheckpoint (the window-audit trick — the lazy checkpoint
-    # leaves no plan marker before an action) to pin that the knob
-    # really controls the staging call.
-    from tests.test_window_audit import _checkpoint_patch_targets
+    # the staging checkpoint is correctness-neutral: the bucketed
+    # series is a deterministic aggregation, so the three consumers
+    # recomputing it give the same answer
+    from tests.test_window_audit import checkpoint_passthrough
 
-    calls = []
-    reals = [
-        (cls, cls.__dict__.get("localCheckpoint"))
-        for cls in _checkpoint_patch_targets()
-    ]
-    try:
-        for cls, real in reals:
-            if real is not None:
-                cls.localCheckpoint = (
-                    lambda self, *a, _r=real, **kw: (
-                        calls.append(1), _r(self, *a, **kw))[1]
-                )
-        unstaged = st.theilsen_trend(df, group_cols=["g"], stage=False)
-        assert calls == []
-        st.theilsen_trend(df, group_cols=["g"])
-        assert calls == [1]
-    finally:
-        for cls, real in reals:
-            if real is not None:
-                cls.localCheckpoint = real
+    with checkpoint_passthrough():
+        unstaged = st.theilsen_trend(df, group_cols=["g"])
     assert unstaged.collect()[0] == out
 
 
