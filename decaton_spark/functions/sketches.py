@@ -18,7 +18,7 @@ Two Spark-native forms:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from decaton_spark.functions.hashing import md5_bucket, md5_long
@@ -447,48 +447,60 @@ def histogram_sketch_quantiles(
     bounds = base.groupBy("grp").agg(
         F.min("v2").alias("mn2"), F.max("v2").alias("mx2")
     )
-    # Pure-integer bucket assignment ((v2-mn2) ≥ 0, so DIV == floor):
-    # bit-identical to the streaming twin (stateful.py) and to
-    # the DuckDB oracle's `//` at ANY magnitude — the former double
-    # floor diverged once (v2-mn2)*buckets exceeded 2^53 or on
-    # double-rounding at exact bucket edges of very wide ranges.
     withb = base.join(F.broadcast(bounds), "grp").select(
-        "grp",
-        "mn2",
-        "mx2",
-        F.expr(f"CAST(((v2 - mn2) * {buckets}) DIV (mx2 - mn2 + 1) AS BIGINT)")
-        .alias("b"),
+        "grp", "mn2", "mx2", histogram_bucket(buckets).alias("b")
     )
     hist = withb.groupBy("grp", "mn2", "mx2", "b").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
-    w = (
-        Window.partitionBy("grp")
-        .orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    counts = hist.groupBy("grp", "mn2", "mx2").agg(
+        dense_counts("b", "c", buckets).alias("cs")
     )
-    cum = hist.select(
+    return histogram_readout(counts, group_col, buckets, quantiles)
+
+
+def histogram_bucket(buckets: int) -> Column:
+    """Bucket of the centi value ``v2`` in the equi-width histogram over
+    ``[mn2, mx2]``. Pure integer ((v2-mn2) ≥ 0, so DIV == floor): the
+    batch and streaming sketches and the DuckDB oracle's ``//`` agree at
+    ANY magnitude — a double floor diverged once (v2-mn2)*buckets
+    exceeded 2^53 or on double-rounding at exact bucket edges."""
+    return F.expr(f"CAST(((v2 - mn2) * {buckets}) DIV (mx2 - mn2 + 1) AS BIGINT)")
+
+
+def dense_counts(bucket_col: str, count_col: str, size: int) -> Column:
+    """Aggregate: a group's sparse (bucket, count) rows as one dense
+    ``size``-cell count array, 0 where no row names the bucket. Buckets
+    outside ``[0, size)`` are not in the array."""
+    m = F.map_from_entries(F.collect_list(F.struct(bucket_col, count_col)))
+    return F.transform(
+        F.sequence(F.lit(0).cast("long"), F.lit(size - 1).cast("long")),
+        lambda i: F.coalesce(F.try_element_at(m, i), F.lit(0).cast("long")),
+    )
+
+
+def histogram_readout(
+    counts: DataFrame, group_col: str, buckets: int, quantiles: tuple[int, ...]
+) -> DataFrame:
+    """The quantile readout of the batch and streaming histogram sketches.
+
+    ``counts`` holds (grp, mn2, mx2, cs) with ``cs`` the dense
+    ``buckets``-cell count array. Returns (group, n, p<q>_centi...):
+    each estimate is the lower edge of the first bucket whose
+    cumulative count reaches ``ceil(q·n/100)`` (at least 1, so the
+    bucket is never empty), NULL when no bucket does."""
+    total = "aggregate({}, 0L, (a, c) -> a + c)"
+    cum = counts.selectExpr(
         "grp",
         "mn2",
         "mx2",
-        "b",
-        F.sum("c").over(w).alias("cum"),
-        F.sum("c").over(
-            Window.partitionBy("grp").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("n"),
-        (
-            F.col("mn2")
-            + F.expr(f"CAST((b * (mx2 - mn2 + 1)) DIV {buckets} AS BIGINT)")
-        ).alias("est2"),
+        f"{total.format('cs')} AS n",
+        f"transform(cs, (c, i) -> {total.format('slice(cs, 1, i + 1)')}) AS cum",
     )
-    aggs = [F.max("n").cast("long").alias("n")]
-    for q in quantiles:
-        target = F.expr(f"CAST((n * {q} + 99) DIV 100 AS BIGINT)")
-        aggs.append(
-            F.min(F.when(F.col("cum") >= target, F.col("est2")))
-            .cast("long")
-            .alias(f"p{q}_centi")
-        )
-    return cum.groupBy(F.col("grp").alias(group_col)).agg(*aggs)
+    est = [
+        f"mn2 + (nullif(array_position(transform(cum, c -> c >= greatest("
+        f"(n * {q} + 99) DIV 100, 1)), true), 0) - 1)"
+        f" * (mx2 - mn2 + 1) DIV {buckets} AS p{q}_centi"
+        for q in quantiles
+    ]
+    return cum.selectExpr(f"grp AS {group_col}", "n", *est)

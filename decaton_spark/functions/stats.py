@@ -656,3 +656,38 @@ def gini_concentration(
         F.col("_sx").cast("long").alias("total_value"),
         F.when(ok, F.round(g * 1_000_000)).cast("long").alias("gini_micro"),
     )
+
+
+def psi_from_counts(pre: Column, post: Column) -> list[Column]:
+    """Population Stability Index between two equal-length bucket-count
+    arrays, as the (n_buckets, psi_upm) columns of the batch
+    ``events_psi_drift`` gauge and its streaming monitor.
+
+    A cell that is zero on both sides is not a bucket. Shares are
+    Laplace-smoothed, ``(1e6·c + 1) / (total + cells)`` — a double
+    ``1e6`` (in SQL text the literal would be a DECIMAL). Each bucket's
+    contribution ``(p − q)·ln(p/q)`` rounds to 6 decimals and the
+    contributions sum as DECIMAL, so the total is order-free; it is
+    reported rounded, in micro-PSI.
+    """
+    total = lambda a: F.aggregate(a, F.lit(0).cast("long"), lambda s, c: s + c)  # noqa: E731
+    cells = F.filter(
+        F.zip_with(pre, post, lambda a, b: F.struct(a.alias("a"), b.alias("b"))),
+        lambda c: (c["a"] != 0) | (c["b"] != 0),
+    )
+    tp, tq, k = total(pre), total(post), F.size(pre)
+
+    def contrib(c: Column) -> Column:
+        p = (F.lit(1000000.0) * c["a"] + 1.0) / (tp + k)
+        q = (F.lit(1000000.0) * c["b"] + 1.0) / (tq + k)
+        return F.round((p - q) * F.log(p / q), 6).cast("decimal(24,6)")
+
+    psi = F.aggregate(
+        F.transform(cells, contrib),
+        F.lit(0).cast("decimal(38,6)"),
+        lambda s, c: (s + c).cast("decimal(38,6)"),
+    )
+    return [
+        F.size(cells).cast("long").alias("n_buckets"),
+        F.round(psi).cast("long").alias("psi_upm"),
+    ]

@@ -4,8 +4,9 @@ The reference registers ~25 meters under the ``decaton.`` namespace,
 grouped by scope (``processor/src/main/java/com/linecorp/decaton/
 processor/metrics/Metrics.java:114-352``): subscription loop timers,
 per-task counters/timers, partition state gauges, retry/shaping
-counters, scheduler timers. This module reproduces that surface —
-the same meter names, tags, and kinds — on Spark primitives:
+counters, scheduler timers. This module reproduces the part of that
+surface the engine writes — the same meter names, tags, and kinds — on
+Spark primitives:
 
 - dataflow counters are computed *inside* the job via
   ``DataFrame.observe`` (no second pass) and folded into meters with
@@ -13,15 +14,17 @@ the same meter names, tags, and kinds — on Spark primitives:
   ``tasks.queued``: it is the count of rows that went through the
   processor's first action over the microbatch frame, so a processor
   that reads only part of the frame (e.g. through ``limit``) counts
-  only that part. A batch the processor ran no action over (a replay
-  its sink skipped) is counted with one ``count()``;
+  only that part. The subscription observes every batch, metered or
+  not; a batch the processor ran no action over (a replay its sink
+  skipped) is counted with one ``count()``;
 - loop-section timers come from ``StreamingQueryProgress.durationMs``
   via :class:`MeterListener` (Spark's microbatch phases mapped onto the
   reference's poll/records/reload/pause/commit sections);
 - partition-state gauges are driven by the subscription loop
   (pause/throttle handling in ``streaming/subscription.py``).
-  ``tasks.pending`` is not: the frame is counted only while the
-  processor runs, so the gauge reads 0 between batches.
+
+Reference meters with no Spark analog are not registered (COVERAGE.md
+lists them): a meter nothing writes would read 0 forever.
 
 Percentile behavior mirrors ``publishPercentiles(0.5, .9, .99, .999)``
 (``Metrics.java:134-137``): timers and summaries keep their samples and
@@ -205,16 +208,6 @@ class TaskMetrics:
         self.tasks_delivery_latency = registry.timer(
             "tasks.delivery.latency", **tags
         )
-        self.tasks_scheduled_delay = registry.timer(
-            "tasks.scheduled.process.delay", **tags
-        )
-
-
-class CommitControlMetrics:
-    """``Metrics.java:209-216``."""
-
-    def __init__(self, registry: MeterRegistry, **tags: str) -> None:
-        self.tasks_timeout = registry.counter("tasks.timeout", **tags)
 
 
 class ThreadUtilizationMetrics:
@@ -233,7 +226,6 @@ class PartitionStateMetrics:
     batch is read, ``last.committed`` when its checkpoint commits."""
 
     def __init__(self, registry: MeterRegistry, **tags: str) -> None:
-        self.tasks_pending = registry.gauge("tasks.pending", **tags)
         self.partition_paused = registry.gauge("partition.paused", **tags)
         self.offset_last_committed = registry.gauge(
             "offset.last.committed", **tags
@@ -265,9 +257,6 @@ class SchedulerMetrics:
     """``Metrics.java:305-319``."""
 
     def __init__(self, registry: MeterRegistry, **tags: str) -> None:
-        self.tasks_scheduling_delay = registry.timer(
-            "tasks.scheduling.delay", **tags
-        )
         self.partition_throttled_time = registry.timer(
             "partition.throttled.time", **tags
         )
@@ -278,26 +267,11 @@ class RetryMetrics:
 
     def __init__(self, registry: MeterRegistry, **tags: str) -> None:
         self.retry_queued_tasks = registry.counter("retry.queued.tasks", **tags)
-        self.retry_queueing_failed = registry.counter(
-            "retry.queueing.failed", **tags
-        )
         self.retry_task_retries = registry.summary("retry.task.retries", **tags)
 
 
-class ShapingMetrics:
-    """``Metrics.java:341-355``."""
-
-    def __init__(self, registry: MeterRegistry, **tags: str) -> None:
-        self.shaping_queued_tasks = registry.counter(
-            "shaping.queued.tasks", **tags
-        )
-        self.shaping_queueing_failed = registry.counter(
-            "shaping.queueing.failed", **tags
-        )
-
-
-#: Every meter name the reference publishes (namespaced) — the parity
-#: checklist tests assert against.
+#: Every meter name registered here (namespaced): the reference's names
+#: that the engine writes — the parity checklist tests assert against.
 ALL_METER_NAMES = frozenset(
     f"{NAMESPACE}.{n}"
     for n in (
@@ -308,24 +282,17 @@ ALL_METER_NAMES = frozenset(
         "tasks.complete.duration",
         "tasks.process.duration",
         "tasks.delivery.latency",
-        "tasks.scheduled.process.delay",
-        "tasks.timeout",
         "processor.processed.time",
         "tasks.queued",
-        "tasks.pending",
         "partition.paused",
         "offset.last.committed",
         "offset.latest.consumed",
         "partition.queue.starved.time",
         "partition.paused.time",
         "records.consumed",
-        "tasks.scheduling.delay",
         "partition.throttled.time",
         "retry.queued.tasks",
-        "retry.queueing.failed",
         "retry.task.retries",
-        "shaping.queued.tasks",
-        "shaping.queueing.failed",
     )
 )
 
@@ -346,13 +313,11 @@ class Metrics:
         part = {**sub, "topic": topic, "partition": partition}
         self.subscription = SubscriptionMetrics(self.registry, **sub)
         self.task = TaskMetrics(self.registry, **part)
-        self.commit_control = CommitControlMetrics(self.registry, **part)
         self.thread_util = ThreadUtilizationMetrics(self.registry, **part)
         self.partition_state = PartitionStateMetrics(self.registry, **part)
         self.records = RecordMetrics(self.registry, **part)
         self.scheduler = SchedulerMetrics(self.registry, **part)
         self.retry = RetryMetrics(self.registry, **part)
-        self.shaping = ShapingMetrics(self.registry, **part)
 
 
 # ---------------------------------------------------------------------------

@@ -11532,8 +11532,13 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final round is scale-0 — the certified tfidf/ANN pattern.
 
     100 TB shape: ONE bucket-count pass with map-side partials
-    (|types|·20 cells), totals joined back at cell granularity —
-    nothing bigger than the histogram ever moves."""
+    (|types|·20 cells), then one row per type holding its dense pre and
+    post count arrays, read by ``stats.psi_from_counts`` (the streaming
+    ``streaming_psi_monitor`` reads its arrays the same way) — nothing
+    bigger than the histogram ever moves. ``value`` is nonnegative, so
+    buckets are 0..19."""
+    from decaton_spark.functions import stats as st
+
     ev = load_table(spark, "events", sf_dir).filter(F.col("value").isNotNull())
     mid = ev.agg(
         F.expr(
@@ -11548,43 +11553,15 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(round(value * 100) AS BIGINT) DIV 2500"), F.lit(19)
         ).alias("bucket"),
     )
-    cells = (
-        b.groupBy("event_type", "bucket")
-        .agg(
-            F.sum(F.when(F.col("post") == 0, 1).otherwise(0))
-            .cast("long")
-            .alias("n_pre"),
-            F.sum(F.when(F.col("post") == 1, 1).otherwise(0))
-            .cast("long")
-            .alias("n_post"),
-        )
-        # the |types|·20 histogram feeds the totals AND the contrib
-        # join — stage it once so the raw scan never re-runs
-        .localCheckpoint(eager=False)
+    cells = b.groupBy("event_type", "bucket").agg(
+        F.sum(F.when(F.col("post") == 0, 1).otherwise(0)).cast("long").alias("n_pre"),
+        F.sum(F.when(F.col("post") == 1, 1).otherwise(0)).cast("long").alias("n_post"),
     )
-    tot = cells.groupBy("event_type").agg(
-        F.sum("n_pre").cast("long").alias("t_pre"),
-        F.sum("n_post").cast("long").alias("t_post"),
+    counts = cells.groupBy("event_type").agg(
+        sk.dense_counts("bucket", "n_pre", 20).alias("pre"),
+        sk.dense_counts("bucket", "n_post", 20).alias("post"),
     )
-    p = (F.lit(1000000.0) * F.col("n_pre") + 1.0) / (F.col("t_pre") + 20)
-    q = (F.lit(1000000.0) * F.col("n_post") + 1.0) / (F.col("t_post") + 20)
-    return (
-        cells.join(F.broadcast(tot), "event_type")
-        .select(
-            "event_type",
-            # per-bucket contributions round then DECIMAL-sum so the
-            # total is order-free (the ndcg pattern) — a raw double
-            # sum would depend on partition order
-            F.round((p - q) * F.log(p / q), 6)
-            .cast("decimal(24,6)")
-            .alias("contrib"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_buckets"),
-            F.round(F.sum("contrib")).cast("long").alias("psi_upm"),
-        )
-    )
+    return counts.select("event_type", *st.psi_from_counts(F.col("pre"), F.col("post")))
 
 
 @register(

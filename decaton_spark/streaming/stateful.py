@@ -12,14 +12,32 @@ path. Unlike the reference, state is checkpointed (RocksDB/HDFS state
 store), so a restart does not lose the window — strictly stronger
 than Decaton's in-memory window (SURVEY §2.6 "lost on rebalance").
 
-The A/B monitor is likewise its batch operator (``welch_ttest``) run
-on the stream. The other operators here are each a single
-``applyInPandasWithState`` form (the ``mapGroupsWithState`` model of
-the Structured Streaming paper). The per-key hash shuffle of
-groupByKey IS the sub-partitioner (P1); rows within a (key, batch) are
-processed in (partition, offset) order, preserving Decaton's
-PROCESS_ORDERING invariant; keys are independent, giving
-SERIAL_PROCESSING per key.
+Four operators here are their batch operator run on the stream as a
+native state-store aggregation: compaction (``compact_tasks``), the A/B
+monitor (``welch_ttest``), the histogram monitor
+(``sketches.histogram_readout``) and the PSI monitor
+(``stats.psi_from_counts``). Each keeps order-free sums or a max in
+state, which update mode can fold; the two counting monitors spell
+their count vector as one conditional count per bucket, since update
+mode allows no aggregate over an aggregate.
+
+The other operators are each a single ``applyInPandasWithState`` form
+(the ``mapGroupsWithState`` model of the Structured Streaming paper),
+because their state is not such a fold:
+
+- ``streaming_kmv`` keeps a bottom-k set; Spark has no bounded
+  bottom-k aggregate, and ``theta_sketch_agg`` would change the
+  estimate, so the last emission would no longer equal the batch
+  ``kmv_distinct_estimate``;
+- ``streaming_cusum`` and ``streaming_zscore_alerts`` fold rows in
+  order (a running prefix minimum, a trailing window), which no
+  order-free aggregate expresses;
+- the rest hold timers, per-row verdicts or buffers.
+
+The per-key hash shuffle of groupByKey IS the sub-partitioner (P1);
+rows within a (key, batch) are processed in (partition, offset) order,
+preserving Decaton's PROCESS_ORDERING invariant; keys are independent,
+giving SERIAL_PROCESSING per key.
 
 All of them run unchanged on either state-store provider — the default
 HDFS-backed store or RocksDB
@@ -34,11 +52,12 @@ import functools
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from decaton_spark.functions.stats import welch_ttest
+from decaton_spark.functions import sketches as sk
+from decaton_spark.functions.stats import psi_from_counts, welch_ttest
 from decaton_spark.operators.compaction import compact_tasks
 
 
@@ -58,6 +77,22 @@ def _cm_buckets(key: str, depth: int, width: int) -> tuple[int, ...]:
         int(hashlib.md5(f"d{d}|{key}".encode()).hexdigest()[:8], 16) % width
         for d in range(depth)
     )
+
+
+def _cm_estimate(sketch: list[int], bks: tuple[int, ...], width: int) -> int:
+    """Count-Min estimate of a key: the min over its depth cells."""
+    return min(sketch[d * width + b] for d, b in enumerate(bks))
+
+
+def _cm_bump(sketch: list[int], bks: tuple[int, ...], width: int) -> int:
+    """Count one occurrence of a key with the conservative update
+    (``KeyCounter.java:121-142``): raise each of its cells only up to
+    the new estimate, which is returned."""
+    new = _cm_estimate(sketch, bks, width) + 1
+    for d, b in enumerate(bks):
+        idx = d * width + b
+        sketch[idx] = max(sketch[idx], new)
+    return new
 
 
 def streaming_compact(
@@ -215,17 +250,6 @@ def streaming_quota(
             return
         batch = batch.sort_values("offset")
         out_rows = {"key": [], "offset": [], "estimate": [], "quota_verdict": []}
-
-        def _estimate(sketch: list[int], bks: list[int]) -> int:
-            return min(sketch[d * width + b] for d, b in enumerate(bks))
-
-        def _bump(sketch: list[int], bks: list[int]) -> int:
-            new = _estimate(sketch, bks) + 1
-            for d, b in enumerate(bks):  # conservative update
-                idx = d * width + b
-                sketch[idx] = max(sketch[idx], new)
-            return new
-
         for key, off, ts in zip(
             batch["key"], batch["offset"], batch["meta_timestamp_millis"]
         ):
@@ -238,9 +262,9 @@ def streaming_quota(
                 counts, win = list(zeros), w
             bks = _cm_buckets(key, depth, width)
             if w == win:
-                est = _bump(counts, bks) + _estimate(prev, bks)
+                est = _cm_bump(counts, bks, width) + _cm_estimate(prev, bks, width)
             else:  # late row: belongs to (or before) the previous window
-                est = _bump(prev, bks) + _estimate(counts, bks)
+                est = _cm_bump(prev, bks, width) + _cm_estimate(counts, bks, width)
             out_rows["key"].append(key)
             out_rows["offset"].append(int(off))
             out_rows["estimate"].append(est)
@@ -517,10 +541,7 @@ def streaming_heavy_hitters(
             bks = bucket_cache.get(key)
             if bks is None:
                 bks = bucket_cache[key] = _cm_buckets(key, depth, width)
-            est = min(counts[d * width + b] for d, b in enumerate(bks)) + 1
-            for d, b in enumerate(bks):  # conservative update
-                idx = d * width + b
-                counts[idx] = max(counts[idx], est)
+            est = _cm_bump(counts, bks, width)
             if est >= threshold and key not in seen:
                 seen.add(key)
                 out["key"].append(key)
@@ -757,84 +778,59 @@ def streaming_histogram_quantiles(
     buckets: int = 64,
     quantiles: tuple[int, ...] = (50, 90, 99),
 ) -> DataFrame:
-    """Streaming equi-width histogram quantiles: per-group bucket
-    counters in keyed state, refreshed estimates emitted whenever a
-    microbatch touches a group — the continuous form of
+    """Streaming equi-width histogram quantiles: the batch
     ``sketches.histogram_sketch_quantiles`` with FIXED bounds (a
     streaming sketch cannot learn min/max retroactively; deployments
     pin per-group bounds from a calibration pass, exactly like the
     offline quantizer/centroid stores — ``bounds`` maps group →
-    (mn2, mx2) in centi-units; uncalibrated groups are skipped).
+    (mn2, mx2) in centi-units). Rows of uncalibrated groups and values
+    outside their group's bounds are dropped.
 
-    Arithmetic mirrors the batch op integer-for-integer (centi-unit
-    snap, nonneg floor-division bucket, readout at the first bucket
-    reaching ``ceil(q·n/100)``) so the LAST emitted row per group
-    equals the batch sketch over the same rows with the same bounds,
-    for ANY microbatch split. State per group is ≤``buckets`` counts.
+    A native streaming aggregation (no Python worker): the state store
+    keeps ``buckets`` counts per group, folded by the batch sketch's
+    bucket expression, and every microbatch emits the groups it touched
+    through the batch sketch's readout — so the LAST emitted row per
+    group equals the batch sketch over the same rows with the same
+    bounds, for ANY microbatch split. Run it in ``update`` output mode.
+
+    Checkpoints of the earlier ``applyInPandasWithState`` form cannot be
+    resumed: the state schema differs.
     """
-    out_cols = ", ".join(f"p{q}_centi long" for q in quantiles)
-    out_schema = f"{group_col} string, n long, {out_cols}"
-    state_schema = "bs array<long>, cs array<long>"
-
-    def update(key, pdfs, state: GroupState):
-        if key[0] not in bounds:
-            return  # uncalibrated group: nothing to sketch against
-        mn2, mx2 = bounds[key[0]]
-        width = mx2 - mn2 + 1
-        if state.exists:
-            bs, cs = state.get
-            counts = dict(zip(bs, cs))
-        else:
-            counts = {}
-        changed = False
-        for batch in pdfs:
-            for v in batch[value_col]:
-                if v is None or (isinstance(v, float) and pd.isna(v)):
-                    continue
-                v2 = int(_round_half_away(float(v) * 100))
-                if v2 < mn2 or v2 > mx2:
-                    continue  # out-of-calibration values are dropped loudly
-                b = ((v2 - mn2) * buckets) // width
-                counts[b] = counts.get(b, 0) + 1
-                changed = True
-        if not changed or not counts:
-            return
-        items = sorted(counts.items())
-        state.update(([b for b, _ in items], [c for _, c in items]))
-        n = sum(counts.values())
-        row = {group_col: [key[0]], "n": [n]}
-        cum = 0
-        targets = {q: (n * q + 99) // 100 for q in quantiles}
-        est = {}
-        for b, c in items:
-            cum += c
-            for q, t in targets.items():
-                if q not in est and cum >= t:
-                    est[q] = mn2 + (b * width) // buckets
-        for q in quantiles:
-            row[f"p{q}_centi"] = [est[q]]
-        yield pd.DataFrame(row)
-
-    return (
-        events.select(group_col, value_col)
-        .groupBy(group_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    bound = _map_lit(
+        bounds,
+        lambda b: F.struct(
+            F.lit(int(b[0])).cast("long").alias("mn2"),
+            F.lit(int(b[1])).cast("long").alias("mx2"),
+        ),
+    )[F.col(group_col)]
+    rows = (
+        events.where(F.col(group_col).isin(list(bounds)) & F.col(value_col).isNotNull())
+        .select(
+            F.col(group_col).alias("grp"),
+            F.round(F.col(value_col).cast("double") * 100).cast("long").alias("v2"),
+            bound["mn2"].alias("mn2"),
+            bound["mx2"].alias("mx2"),
         )
+        .where(F.col("v2").between(F.col("mn2"), F.col("mx2")))
+        .select("grp", "mn2", "mx2", sk.histogram_bucket(buckets).alias("b"))
     )
+    counts = rows.groupBy("grp", "mn2", "mx2").agg(
+        _count_vector("b", buckets).alias("cs")
+    )
+    return sk.histogram_readout(counts, group_col, buckets, quantiles)
 
 
-def _round_half_away(x: float) -> int:
-    """round() with half-away-from-zero ties — the snap Spark's
-    ``F.round`` and DuckDB's ``round`` both apply (Python's builtin
-    banker's rounding would diverge on exact .5 centi boundaries)."""
-    import math
+def _map_lit(entries: dict, value) -> Column:
+    """``entries`` as a map literal, each value built by ``value``."""
+    return F.create_map(*(c for k, v in entries.items() for c in (F.lit(k), value(v))))
 
-    return int(math.floor(x + 0.5)) if x >= 0 else int(math.ceil(x - 0.5))
+
+def _count_vector(bucket_col: str, n: int) -> Column:
+    """Aggregate: the dense count array of buckets ``0..n-1`` as ``n``
+    conditional counts, the only form update mode allows (no aggregate
+    over an aggregate)."""
+    b = F.col(bucket_col)
+    return F.array(*(F.count(F.when(b == i, 1)) for i in range(n)))
 
 
 def streaming_cusum(
@@ -974,16 +970,17 @@ def streaming_psi_monitor(
 ) -> DataFrame:
     """Streaming PSI drift monitor: the streaming twin of the batch
     ``events_psi_drift`` gauge. The reference (pre-period) histogram
-    arrives as a per-group calibration vector (the CUSUM-baseline
-    pattern); state per group is the running ``n_bins``-bucket count
-    vector + total — O(n_bins) longs regardless of traffic. Each
-    microbatch folds its bucket counts in (integer sums — any
-    microbatch split replays to the same state) and emits the current
-    PSI through the batch operator's exact arithmetic (Laplace-
-    smoothed shares, per-bucket contributions rounded at 6 decimals
-    and integer-summed, half-up final round) — the final emission per
-    group is bit-equal to the batch PSI over the same rows (pinned in
-    the invariant suite).
+    arrives as a per-group calibration vector of ``n_bins`` counts (the
+    CUSUM-baseline pattern); rows of other groups are dropped.
+
+    A native streaming aggregation (no Python worker): the state store
+    keeps the running ``n_bins`` bucket counts per group — integer sums,
+    so any microbatch split replays to the same state — and every
+    microbatch emits the groups it touched through
+    ``stats.psi_from_counts``, the batch gauge's own arithmetic, so the
+    final emission per group equals the batch PSI over the same rows. A
+    bucket outside ``[0, n_bins)`` fails the query and names the
+    bucket; a null bucket is not counted.
 
     This is how drift monitoring actually deploys: the reference
     freezes at model training time, production traffic streams, and
@@ -991,64 +988,24 @@ def streaming_psi_monitor(
     recompute over history.
 
     Emits (group, n_obs, n_buckets, psi_upm) per touched group per
-    microbatch.
+    microbatch; run it in ``update`` output mode. Checkpoints of the
+    earlier ``applyInPandasWithState`` form cannot be resumed: the state
+    schema differs.
     """
-    import math
-
-    out_schema = f"{group_col} string, n_obs long, n_buckets long, psi_upm long"
-    state_schema = "counts array<bigint>, n long"
-    pre_tot = {g: sum(v) for g, v in baselines.items()}
-
-    def update(key, pdfs, state: GroupState):
-        g = key[0]
-        if g not in baselines:
-            return
-        if state.exists:
-            counts, n = state.get
-            counts = list(counts)
-        else:
-            counts, n = [0] * n_bins, 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        vc = batch[bucket_col].value_counts()
-        for b, c in vc.items():
-            if not 0 <= int(b) < n_bins:  # a negative bucket would
-                # silently WRAP to counts[-1] — fail loudly instead
-                raise ValueError(f"bucket {b} outside [0, {n_bins})")
-            counts[int(b)] += int(c)
-        n += int(len(batch))
-        state.update((counts, n))
-        pre, tp, tq = baselines[g], pre_tot[g], n
-        su6 = 0
-        nb = 0
-        for i in range(n_bins):
-            if pre[i] == 0 and counts[i] == 0:
-                continue  # cell unobserved on both sides: not a bucket
-            nb += 1
-            p = (1e6 * pre[i] + 1.0) / (tp + 20)
-            q = (1e6 * counts[i] + 1.0) / (tq + 20)
-            # mirror F.round(contrib, 6) + DECIMAL sum: 6-decimal
-            # integer units, half-away rounding (contributions >= 0)
-            su6 += _round_half_away((p - q) * math.log(p / q) * 1e6)
-        psi = (su6 + 500000) // 1000000  # HALF_UP at scale 0, su6 >= 0
-        yield pd.DataFrame(
-            {
-                group_col: [g],
-                "n_obs": [n],
-                "n_buckets": [nb],
-                "psi_upm": [psi],
-            }
-        )
-
-    return (
-        events.select(group_col, bucket_col)
-        .groupBy(group_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    b = F.col(bucket_col)
+    outside = F.raise_error(
+        F.format_string(f"bucket %d outside [0, {n_bins})", b)
+    )
+    rows = events.where(F.col(group_col).isin(list(baselines))).select(
+        group_col,
+        F.when((b < 0) | (b >= n_bins), outside).otherwise(b).alias("_b"),
+    )
+    pre = _map_lit(
+        baselines, lambda v: F.array(*(F.lit(int(c)).cast("long") for c in v))
+    )[F.col(group_col)]
+    counts = rows.groupBy(group_col).agg(_count_vector("_b", n_bins).alias("post"))
+    return counts.select(
+        group_col,
+        F.aggregate("post", F.lit(0).cast("long"), lambda s, c: s + c).alias("n_obs"),
+        *psi_from_counts(pre, F.col("post")),
     )

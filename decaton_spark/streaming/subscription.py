@@ -54,15 +54,18 @@ class Subscription:
     it come from the Pipeline (pure DataFrame ops, checked by the batch
     oracle).
 
-    The pipeline runs once per microbatch. With ``meters`` or a rate
-    limit attached, the frame handed to ``process_fn`` carries an
-    ``Observation`` that counts rows during the processor's first
-    action over it; that count feeds ``tasks.queued`` and the token
-    bucket, which is paced after processing (its debt keeps the
-    long-run rate). A processor that reads only part of the frame
-    (e.g. ``limit``) counts only that part; one that runs no action
-    (a replay its sink skipped) is counted with one ``count()``.
-    ``tasks.pending`` is not driven and reads 0 between batches.
+    The pipeline runs once per microbatch. The frame handed to
+    ``process_fn`` carries an ``Observation`` that counts rows during
+    the processor's first action over it; that count feeds
+    ``tasks.queued`` and the token bucket, which is paced after
+    processing (its debt keeps the long-run rate). A processor that
+    reads only part of the frame (e.g. ``limit``) counts only that part.
+    A batch the processor runs no action over (a replay its sink
+    skipped, or no processor) is counted with one ``count()``. That
+    count is what runs the batch's plan, so a stateful pipeline commits
+    its state store for every batch, with or without meters: a
+    restart after a crash between the sink's write and the checkpoint
+    commit resumes.
     """
 
     def __init__(
@@ -123,13 +126,10 @@ class Subscription:
             from decaton_spark.operators.filters import ignore_keys as _ik
 
             df = _ik(df, cfg.ignore_keys)
-        df = self.pipeline.apply(df)
-        obs = None
-        if self._bucket is not None or self.meters is not None:
-            # count the rows in-job, during the processor's own action:
-            # an unobserved count() here would run the pipeline twice
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        # count the rows in-job, during the processor's own action: an
+        # unobserved count() here would run the pipeline twice
+        obs = Observation()
+        df = self.pipeline.apply(df).observe(obs, F.count(F.lit(1)).alias("n"))
         if self.process_fn is not None:
             started = time.monotonic()
             self.process_fn(df, batch_id)
@@ -138,8 +138,6 @@ class Subscription:
                 self.meters.thread_util.processor_processed_time.record(took)
                 self.meters.task.tasks_process_duration.record(took)
                 self.meters.task.tasks_complete_duration.record(took)
-        if obs is None:
-            return
         n = _observed_count(self.spark, obs, df)
         if self.meters is not None:
             self.meters.thread_util.tasks_queued.increment(n)
@@ -186,7 +184,9 @@ def _observed_count(spark: SparkSession, obs: Observation, df: DataFrame) -> int
     may complete through the listener bus after the action returns, so
     drain the bus if it is not complete yet; if no action ran (a
     replayed batch the sink skipped, or no processor), count ``df``
-    itself, which also completes and releases ``obs``."""
+    itself. That runs the batch's plan once, which commits any state
+    store in it (Spark rejects a stateful batch whose state stores did
+    not commit), and completes and releases ``obs``."""
     done = obs._jo.future()
     if not done.isCompleted():
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()

@@ -9,6 +9,7 @@ from __future__ import annotations
 import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from decaton_spark.envelope import events_to_tasks
@@ -16,6 +17,10 @@ from decaton_spark.meters import Metrics
 from decaton_spark.operators import Pipeline, compact_tasks, ignore_keys
 from decaton_spark.sources import load_table
 from decaton_spark.streaming import Subscription, streaming_compact
+from decaton_spark.streaming.stateful import (
+    streaming_histogram_quantiles,
+    streaming_psi_monitor,
+)
 from decaton_spark.streaming.subscription import SubscriptionConfig, idempotent_parquet_sink
 
 HOUR_MS = 3_600_000
@@ -377,11 +382,9 @@ def _run_compact(stream, ckpt, **kw):
     return q, emitted
 
 
-def test_streaming_compact_plans_native_state_aggregate(spark, tmp_path):
-    """The compaction is a native stateful aggregation: the executed
-    plan saves to the state store and holds no Python node."""
-    stream = _file_stream(spark, tmp_path / "src", [_task_rows(spark).collect()], TASK_SCHEMA)
-    q, _ = _run_compact(stream, str(tmp_path / "ck"), window_ms=HOUR_MS)
+def _assert_native_state_plan(q):
+    """``q`` (ended, not stopped) ran one native state-store
+    aggregation and no Python node; stops ``q``."""
     try:
         plan = q._jsq.explainInternal(True)
         ops = [op.operatorName for op in q.lastProgress.stateOperators]
@@ -391,6 +394,95 @@ def test_streaming_compact_plans_native_state_aggregate(spark, tmp_path):
     assert ops == ["stateStoreSave"]
     for node in ("Python", "InPandas", "ArrowEval"):
         assert node not in plan, node
+
+
+def test_streaming_compact_plans_native_state_aggregate(spark, tmp_path):
+    """The compaction is a native stateful aggregation: the executed
+    plan saves to the state store and holds no Python node."""
+    stream = _file_stream(spark, tmp_path / "src", [_task_rows(spark).collect()], TASK_SCHEMA)
+    q, _ = _run_compact(stream, str(tmp_path / "ck"), window_ms=HOUR_MS)
+    _assert_native_state_plan(q)
+
+
+MONITOR_SCHEMA = "event_type string, value double, bucket long"
+MONITORS = {
+    "histogram": lambda s: streaming_histogram_quantiles(
+        s, "value", "event_type", bounds={"a": (0, 1_000)}
+    ),
+    "psi": lambda s: streaming_psi_monitor(s, baselines={"a": [1] * 20}),
+}
+
+
+def _run_monitor(monitor, stream, ckpt):
+    q = (
+        MONITORS[monitor](stream)
+        .writeStream.foreachBatch(lambda df, bid: df.collect())
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    return q
+
+
+@pytest.mark.parametrize("monitor", sorted(MONITORS))
+def test_counting_monitor_plans_native_state_aggregate(spark, tmp_path, monitor):
+    """The histogram and PSI monitors are native stateful aggregations
+    too: one state-store save, no Python node."""
+    rows = [("a", 1.5, 3), ("a", 7.25, 5), ("b", 2.0, 1)]
+    stream = _file_stream(spark, tmp_path / "src", [rows], MONITOR_SCHEMA)
+    _assert_native_state_plan(_run_monitor(monitor, stream, str(tmp_path / "ck")))
+
+
+@pytest.mark.parametrize("bad", [-1, 20])
+def test_streaming_psi_monitor_rejects_out_of_range_bucket(spark, tmp_path, bad):
+    """A bucket outside [0, n_bins) fails the query and names the
+    bucket, rather than being dropped or wrapping into a valid cell."""
+    rows = [("a", 1.0, 3), ("a", 2.0, bad)]
+    stream = _file_stream(spark, tmp_path / "src", [rows], MONITOR_SCHEMA)
+    with pytest.raises(StreamingQueryException, match=rf"bucket {bad} outside \[0, 20\)"):
+        _run_monitor("psi", stream, str(tmp_path / "ck")).stop()
+
+
+def test_subscription_restart_after_sink_write_without_meters(spark, tmp_path):
+    """A stateful Subscription with no meters and no rate limit restarts
+    after a crash between the sink's write and the checkpoint commit.
+    The replayed batch, which the sink skips, still runs its plan once,
+    so its state store commits; the sink equals a run with no crash."""
+    batches = [
+        [("k1", T0 + 100, 1, "a"), ("k2", T0 + 200, 2, "b")],
+        [("k1", T0 + 300, 3, "c"), ("k3", T0 + 400, 4, "d")],
+    ]
+    stream = _file_stream(spark, tmp_path / "src", batches, TASK_SCHEMA)
+
+    def run(name):
+        sub = Subscription(
+            spark,
+            streaming_compact(stream, window_ms=1_000),
+            process_fn=idempotent_parquet_sink(str(tmp_path / f"sink-{name}")),
+            config=SubscriptionConfig(
+                checkpoint_location=str(tmp_path / f"ckpt-{name}"),
+                trigger={"availableNow": True},
+            ),
+        )
+        sub.start(f"restart-{name}")
+        sub.await_termination(120)
+        sub.stop()
+
+    def sink_rows(name):
+        return sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / f"sink-{name}")).collect())
+
+    run("clean")
+    run("crash")
+    commits = tmp_path / "ckpt-crash" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    assert last == 1
+    (commits / str(last)).unlink()  # the crash: batch 1 is written, not committed
+    (commits / f".{last}.crc").unlink(missing_ok=True)
+    run("crash")  # restart replays batch 1
+    assert sink_rows("crash") == sink_rows("clean")
+    assert len(sink_rows("clean")) == 4
 
 
 def test_streaming_compact_null_payloads_and_timestamps(spark, tmp_path):
