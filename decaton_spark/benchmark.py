@@ -14,6 +14,11 @@ concurrency (partitions × threads ≈ partition count ×
 ``decaton.partition.concurrency``). The engine's job, like Decaton's,
 is keeping every I/O slot full; wall-clock floor is
 ``n_tasks × latency / (partitions × concurrency)``.
+
+Each call is one Spark job (plus the shuffle, when it has to
+repartition): an ``Observation`` counts the input rows in the job that
+processes them, and the call checks that count against the rows its
+workers processed.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -102,18 +107,19 @@ def run_simulated_latency(
         yield pd.DataFrame({"n": [done]})
 
     fn = {"threads": proc, "async": proc_async}[io_mode]
-    n_tasks = tasks.count()
+    # the JVM counts the input rows in the same job that processes them
+    offered = Observation()
+    counted = tasks.observe(offered, F.count(F.lit(1)).alias("n"))
     # spark.range already spreads over default parallelism; only pay a
     # shuffle when the caller asks for a different partition count
     if tasks.rdd.getNumPartitions() != partitions:
-        tasks = tasks.repartition(partitions)
+        counted = counted.repartition(partitions)
     t0 = time.perf_counter()
-    processed = (
-        tasks.mapInPandas(fn, "n long")
-        .agg(F.sum("n").alias("n"))
-        .collect()[0]["n"]
-    )
+    # one row per partition, summed here: an aggregate would add an
+    # exchange, which adaptive execution runs as a job of its own
+    processed = sum(r["n"] for r in counted.mapInPandas(fn, "n long").collect())
     wall = time.perf_counter() - t0
+    n_tasks = offered.get["n"]
     assert processed == n_tasks, (processed, n_tasks)
     return {
         "tasks": n_tasks,

@@ -19,7 +19,8 @@ Spark primitives:
   skipped) is counted with one ``count()``;
 - loop-section timers come from ``StreamingQueryProgress.durationMs``
   via :class:`MeterListener` (Spark's microbatch phases mapped onto the
-  reference's poll/records/reload/pause/commit sections);
+  reference's poll/records/reload/commit sections); the subscription's
+  pause loop times the ``pause`` section;
 - partition-state gauges are driven by the subscription loop
   (pause/throttle handling in ``streaming/subscription.py``).
 
@@ -242,9 +243,10 @@ class PartitionStateMetrics:
 
 
 class RecordMetrics:
-    """Per-wire-format consumption counters (``Metrics.java:279-303``)."""
+    """Per-wire-format consumption counters (``Metrics.java:279-303``).
+    Every engine path decodes the v9 wire format, so it is the only tag."""
 
-    FORMATS = ("decaton.client.v9", "other")
+    FORMATS = ("decaton.client.v9",)
 
     def __init__(self, registry: MeterRegistry, **tags: str) -> None:
         self.records_consumed = {

@@ -536,12 +536,8 @@ def streaming_heavy_hitters(
             return
         batch = batch.sort_values("offset")
         out = {"key": [], "offset": [], "estimate": []}
-        bucket_cache: dict[str, tuple[int, ...]] = {}
         for key, off in zip(batch["key"], batch["offset"]):
-            bks = bucket_cache.get(key)
-            if bks is None:
-                bks = bucket_cache[key] = _cm_buckets(key, depth, width)
-            est = _cm_bump(counts, bks, width)
+            est = _cm_bump(counts, _cm_buckets(key, depth, width), width)
             if est >= threshold and key not in seen:
                 seen.add(key)
                 out["key"].append(key)

@@ -112,9 +112,9 @@ class Subscription:
             time.sleep(0.25)
             cfg = self.config_supplier()
         if pause_started is not None and self.meters is not None:
-            self.meters.partition_state.partition_paused_time.record(
-                time.monotonic() - pause_started
-            )
+            paused_s = time.monotonic() - pause_started
+            self.meters.partition_state.partition_paused_time.record(paused_s)
+            self.meters.subscription.process_durations["pause"].record(paused_s)
             self.meters.partition_state.partition_paused.set(
                 1 if cfg.rate_limit_per_second == 0 else 0
             )

@@ -20,6 +20,7 @@ from decaton_spark.meters import (
     MeterListener,
     MeterRegistry,
     Metrics,
+    RecordMetrics,
     bind_observed,
     observe_task_meters,
     scrape,
@@ -85,6 +86,9 @@ def test_observe_binds_batch_counters(spark):
     assert m.retry.retry_queued_tasks.count == 2  # retry_count > 0 rows
     assert m.retry.retry_task_retries.max == 2
     assert m.records.records_consumed["decaton.client.v9"].count == 6
+    # the engine decodes only the v9 wire format: no tag reads 0 forever
+    assert RecordMetrics.FORMATS == ("decaton.client.v9",)
+    assert set(m.records.records_consumed) == {"decaton.client.v9"}
     # newest task in batch is at 6000ms; batch observed at 10000ms
     assert m.task.tasks_delivery_latency.max == pytest.approx(4.0)
 

@@ -533,6 +533,27 @@ def test_simulated_latency_async_mode(spark):
     assert r["tasks_per_sec"] > 10_000, r
 
 
+def test_simulated_latency_runs_one_job(spark):
+    """One Spark job per call: the input rows are counted by an
+    ``Observation`` in the job that processes them, not by a second
+    ``count()`` job, and the call still returns that count. Asking for
+    another partition count adds the shuffle, which adaptive execution
+    runs as a job of its own."""
+    from decaton_spark.benchmark import latency_tasks, run_simulated_latency
+
+    def job_ids() -> set[int]:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+    tasks = latency_tasks(spark, n_tasks=1_000, latency_ms=1, latency_count=1)
+    same = tasks.rdd.getNumPartitions()
+    for partitions, jobs in ((same, 1), (same + 1, 2)):
+        before = job_ids()
+        r = run_simulated_latency(tasks, partitions=partitions, concurrency=32)
+        assert len(job_ids() - before) == jobs, partitions
+        assert r["tasks"] == 1_000
+
+
 def test_simulated_latency_flat_wrt_io_latency(spark):
     """The reference's headline property (docs/runtime.adoc: throughput
     flat w.r.t. simulated I/O latency, because I/O slots, not CPU, are

@@ -107,7 +107,9 @@ def test_subscription_paused_static_skips_processor(spark, task_stream_dir):
 
 def test_subscription_paused_then_unpaused_resumes(spark, task_stream_dir):
     """PAUSED holds the trigger; when the dynamic property changes the
-    held batch processes (nothing is lost)."""
+    held batch processes (nothing is lost). The pause loop records the
+    time it held the trigger in ``subscription.process.durations{section=
+    pause}``, as in ``partition.paused.time``."""
     path, schema = task_stream_dir
     stream = spark.readStream.schema(schema).parquet(path)
     seen: list[int] = []
@@ -121,17 +123,23 @@ def test_subscription_paused_then_unpaused_resumes(spark, task_stream_dir):
             rate_limit_per_second=rate, trigger={"availableNow": True}
         )
 
+    m = Metrics()
     sub = Subscription(
         spark, stream,
         process_fn=lambda df, bid: seen.append(df.count()),
         config_supplier=supplier,
         config=SubscriptionConfig(trigger={"availableNow": True}),
+        meters=m,
     )
     sub.start("test-unpause")
     sub.await_termination(120)
     sub.stop()
     assert len(polls) >= 3, "pause loop must have re-read the config"
     assert sum(seen) > 0, "held batch must process after unpause"
+    pause = m.subscription.process_durations["pause"]
+    assert pause.count >= 1
+    assert pause.total >= 0.25, "held for at least one 250 ms re-read"
+    assert pause.total == pytest.approx(m.partition_state.partition_paused_time.total)
 
 
 
