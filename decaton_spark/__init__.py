@@ -25,7 +25,7 @@ def _ensure_workers_can_import() -> None:
     importable via ``sys.path.insert`` (or by being launched from the
     repo root) produces workers that CANNOT import it, and every
     Arrow-batched stage whose closure references a module-level
-    function (e.g. ``protocol._decode_task_requests_python``'s
+    function (e.g. ``protocol.decode_task_requests``, whose batches call
     ``parse_task_request``) dies with ``ModuleNotFoundError`` when the
     launch directory isn't the checkout (VERDICT r8 #1). The cure:
     append (never prepend — an installed/`--py-files`-shipped copy

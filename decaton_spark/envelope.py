@@ -105,8 +105,7 @@ def metadata_struct(df: DataFrame) -> DataFrame:
 def metadata_to_header_json(df: DataFrame) -> DataFrame:
     """Serialize the metadata struct to a JSON header value column —
     the engine's (public, documented) stand-in for the protobuf
-    ``dt_meta`` header; ``from_protobuf``/``to_protobuf`` slot in when
-    a descriptor file is available."""
+    ``dt_meta`` header, read back by :func:`extract_task`."""
     df = metadata_struct(df)
     return df.withColumn(
         "headers",
@@ -168,11 +167,17 @@ def extract_task(df: DataFrame, headers_col: str = "headers") -> DataFrame:
         F.lit(1),
     )["value"].cast("string")
     # materialize both parses BEFORE touching `value`: later expressions
-    # must not re-resolve against the replaced column
-    df = df.withColumn("_hdr_meta", F.from_json(hdr_val, METADATA_STRUCT)).withColumn(
-        "_legacy", F.from_json(F.col("value").cast("string"), LEGACY_ENVELOPE_STRUCT)
-    )
+    # must not re-resolve against the replaced column. The value is
+    # parsed as a legacy envelope only when no header carried metadata.
+    df = df.withColumn("_hdr_meta", F.from_json(hdr_val, METADATA_STRUCT))
     has_header = F.col("_hdr_meta").isNotNull()
+    df = df.withColumn(
+        "_legacy",
+        F.when(
+            ~has_header,
+            F.from_json(F.col("value").cast("string"), LEGACY_ENVELOPE_STRUCT),
+        ),
+    )
     legacy = F.col("_legacy")
     legacy_ok = legacy["metadata"].isNotNull() & legacy["serialized_task"].isNotNull()
 
@@ -203,31 +208,3 @@ def extract_task(df: DataFrame, headers_col: str = "headers") -> DataFrame:
         )
     )
     return out.drop("_hdr_meta", "_legacy")
-
-
-def parse_header_metadata(df: DataFrame, headers_col: str = "headers") -> DataFrame:
-    """Decode ``dt_meta`` JSON header back into flat ``meta_*`` columns.
-
-    Mirrors the header-path branch of the reference's task extraction
-    (``DefaultTaskExtractor.java:40-77``): records without the header
-    fall back to default metadata derived from the record timestamp.
-    """
-    hdr = F.filter(
-        F.col(headers_col), lambda h: h["key"] == F.lit(METADATA_HEADER_KEY)
-    )
-    meta = F.from_json(
-        F.element_at(hdr, 1)["value"].cast("string"), METADATA_STRUCT
-    )
-    return (
-        df.withColumn(
-            "meta_timestamp_millis",
-            F.coalesce(meta["timestamp_millis"], F.unix_millis(F.col("timestamp"))),
-        )
-        .withColumn("meta_source_application_id", meta["source_application_id"])
-        .withColumn("meta_source_instance_id", meta["source_instance_id"])
-        .withColumn("meta_retry_count", F.coalesce(meta["retry_count"], F.lit(0)))
-        .withColumn(
-            "meta_scheduled_time_millis",
-            F.coalesce(meta["scheduled_time_millis"], F.lit(0)),
-        )
-    )

@@ -223,8 +223,10 @@ class ThreadUtilizationMetrics:
 
 class PartitionStateMetrics:
     """``Metrics.java:232-277``. In the Spark mapping, the microbatch
-    epoch plays the Kafka offset: ``latest.consumed`` advances when a
-    batch is read, ``last.committed`` when its checkpoint commits."""
+    epoch plays the Kafka offset: ``latest.consumed`` advances when the
+    ``Subscription`` takes a batch, ``last.committed`` when
+    ``MeterListener`` sees the batch's progress, which follows its
+    checkpoint commit."""
 
     def __init__(self, registry: MeterRegistry, **tags: str) -> None:
         self.partition_paused = registry.gauge("partition.paused", **tags)
@@ -417,8 +419,9 @@ class MeterListener(StreamingQueryListener):
                     ms / 1000.0
                 )
         st = self.metrics.partition_state
-        st.offset_latest_consumed.set(p.batchId)
-        st.offset_last_committed.set(p.batchId)  # microbatch checkpointed
+        # progress follows the batch's commit-log write; the
+        # Subscription sets offset.latest.consumed when it takes a batch
+        st.offset_last_committed.set(p.batchId)
         if p.numInputRows == 0:
             # an empty batch = the queue had nothing to feed processors
             st.queue_starved_time.record(

@@ -11,10 +11,9 @@ The Spark-side contract for a 100 TB media pipeline:
   are real and tested, and the BMP path (``decode_images_bmp`` /
   ``resize_images_bmp`` / ``extract_features_bmp``) is a REAL codec:
   a dependency-free 24-bit BMP encoder/decoder + numpy nearest-
-  neighbor resampling operating on actual pixel data. Formats needing
-  external libs stay honestly stubbed (``"fake"`` deterministic;
-  ``"pil"``/``"ffmpeg"`` raise NotImplementedError — not in this
-  container).
+  neighbor resampling operating on actual pixel data. ``decode_images``
+  / ``resize_images`` are deterministic digest-seeded stand-ins for
+  formats that need an external codec (JPEG/PNG/video).
 """
 
 from __future__ import annotations
@@ -67,23 +66,12 @@ def decode_images(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "doc_id",
-    *,
-    backend: str = "fake",
-    batch_note: str = "arrow",
 ) -> DataFrame:
     """Decode stage: (id, width, height, ok). Arrow-batched mapInPandas —
     one python worker call per ~10k-row batch, not per row."""
-    if backend not in ("fake", "pil"):
-        raise ValueError(f"unknown backend {backend!r}")
-
     out_schema = f"{id_col} long, width int, height int, ok boolean"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if backend == "pil":
-            raise NotImplementedError(
-                "PIL is not available in this container; plug the real "
-                "decoder here — the batch plumbing is identical"
-            )
         for pdf in batches:
             dims = [_fake_decode(bytes(p)) for p in pdf[payload_col]]
             yield pd.DataFrame(
@@ -153,28 +141,19 @@ def resize_images(
     *,
     target_w: int = 224,
     target_h: int = 224,
-    backend: str = "fake",
 ) -> DataFrame:
     """Resize stage: (id, width, height, payload) at the target size.
 
-    Real pipelines drop a PIL/libvips call into the batch loop; the
-    fake backend emits a deterministic payload (digest-seeded, length
+    Real pipelines drop a PIL/libvips call into the batch loop; this
+    stand-in emits a deterministic payload (digest-seeded, length
     ∝ target area) so downstream schema/partitioning logic is testable.
     Output partitioning mirrors the input — no shuffle is introduced;
     at 100 TB this stage is pure map work whose cost is the codec, not
     the engine.
     """
-    if backend not in ("fake", "pil"):
-        raise ValueError(f"unknown backend {backend!r}")
-
     out_schema = f"{id_col} long, width int, height int, payload binary"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if backend == "pil":
-            raise NotImplementedError(
-                "PIL is not available in this container; plug the real "
-                "resize into this batch loop"
-            )
         for pdf in batches:
             payloads = []
             for p in pdf[payload_col]:
@@ -200,9 +179,9 @@ def resize_images(
 # The container has no PIL/libvips/ffmpeg, but BMP's format is simple
 # enough to implement directly with struct + numpy — so the decode /
 # resize / feature stages below are REAL image operations, not stubs:
-# backend="bmp" parses actual pixel data and nearest-neighbor-resamples
-# it. PIL/JPEG/PNG still raise NotImplementedError honestly; their call
-# sites drop into the same batch loops.
+# ``decode_images_bmp`` / ``resize_images_bmp`` parse actual pixel data
+# and nearest-neighbor-resample it. A JPEG/PNG codec drops into the same
+# batch loops.
 # ---------------------------------------------------------------------------
 
 

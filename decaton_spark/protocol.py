@@ -8,8 +8,8 @@ The reference's blessed codec is protobuf
 2:serialized_task}``; decoder
 ``protobuf/.../ProtocolBuffersDeserializer.java``).
 
-This container has no spark-protobuf jar, no ``google.protobuf`` and no
-``protoc``, so the wire format is implemented from the public protobuf
+The engine needs no spark-protobuf jar, no ``google.protobuf`` and no
+``protoc``: the wire format is implemented from the public protobuf
 encoding spec (https://protobuf.dev/programming-guides/encoding/):
 
 - **Encoder**: cross-engine SQL fragments (varint + length-delimited
@@ -30,12 +30,6 @@ BLOB-only). Full int64 range: negative values take the canonical
 10-byte two's-complement varint (both engines arithmetic-shift
 negative BIGINTs, so one ``CASE`` covers it), and the decoder folds
 the unsigned wire value back to signed int64 per the spec.
-
-When the ``spark-protobuf`` jar is on the classpath (real cluster —
-not this container), ``decode_task_requests(engine="auto")`` switches
-to JVM-side ``from_protobuf`` driven by a ``FileDescriptorSet`` that
-:func:`descriptor_set_bytes` builds from the same two proto schemas
-(no protoc needed); the Arrow decoder remains the fallback.
 """
 
 from __future__ import annotations
@@ -257,179 +251,10 @@ def parse_task_request(buf: bytes) -> tuple[dict, bytes]:
     return meta, task
 
 
-# ---------------------------------------------------------------------------
-# FileDescriptorSet builder + gated spark-protobuf (JVM) decode path
-# ---------------------------------------------------------------------------
-
-TASK_REQUEST_MESSAGE = "com.linecorp.decaton.protocol.internal.DecatonTaskRequest"
-TASK_METADATA_MESSAGE = "com.linecorp.decaton.protocol.TaskMetadataProto"
-
-# FieldDescriptorProto.Type / .Label enum values (descriptor.proto)
-_TYPE_INT64, _TYPE_STRING, _TYPE_MESSAGE, _TYPE_BYTES = 3, 9, 11, 12
-_LABEL_OPTIONAL = 1
-
-
-def _venc(n: int) -> bytes:
-    """Unsigned varint encoder (descriptor values are all small)."""
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        out.append(b | 0x80 if n else b)
-        if not n:
-            return bytes(out)
-
-
-def _ld(field_number: int, data: bytes) -> bytes:
-    """Length-delimited field: tag + len + payload."""
-    return _venc((field_number << 3) | 2) + _venc(len(data)) + data
-
-
-def _vi(field_number: int, value: int) -> bytes:
-    """Varint field: tag + value."""
-    return _venc(field_number << 3) + _venc(value)
-
-
-def _field_desc(name: str, number: int, ftype: int, type_name: str = "") -> bytes:
-    """FieldDescriptorProto: 1=name 3=number 4=label 5=type 6=type_name."""
-    out = _ld(1, name.encode()) + _vi(3, number) + _vi(4, _LABEL_OPTIONAL)
-    out += _vi(5, ftype)
-    if type_name:
-        out += _ld(6, ("." + type_name).encode())
-    return out
-
-
-def _message_desc(name: str, fields: list[bytes]) -> bytes:
-    """DescriptorProto: 1=name 2=field (repeated)."""
-    out = _ld(1, name.encode())
-    for f in fields:
-        out += _ld(2, f)
-    return out
-
-
-def _file_desc(
-    name: str, package: str, messages: list[bytes], deps: tuple[str, ...] = ()
-) -> bytes:
-    """FileDescriptorProto: 1=name 2=package 3=dependency 4=message_type
-    12=syntax."""
-    out = _ld(1, name.encode()) + _ld(2, package.encode())
-    for d in deps:
-        out += _ld(3, d.encode())
-    for m in messages:
-        out += _ld(4, m)
-    out += _ld(12, b"proto3")
-    return out
-
-
-def descriptor_set_bytes() -> bytes:
-    """``FileDescriptorSet`` wire bytes for decaton.proto +
-    decaton_internal.proto (``protocol/src/main/proto/decaton.proto:9-25``,
-    ``decaton_internal.proto:13-18``), hand-encoded from the public
-    descriptor.proto schema — this is what ``protoc
-    --descriptor_set_out`` would emit, minus source info. Feeds
-    ``from_protobuf(descFilePath=...)`` on clusters that carry the
-    spark-protobuf jar, so JVM-side decode needs no protoc anywhere."""
-    metadata_msg = _message_desc(
-        "TaskMetadataProto",
-        [
-            _field_desc("timestamp_millis", 1, _TYPE_INT64),
-            _field_desc("source_application_id", 2, _TYPE_STRING),
-            _field_desc("source_instance_id", 3, _TYPE_STRING),
-            _field_desc("retry_count", 4, _TYPE_INT64),
-            _field_desc("scheduled_time_millis", 5, _TYPE_INT64),
-        ],
-    )
-    request_msg = _message_desc(
-        "DecatonTaskRequest",
-        [
-            _field_desc("metadata", 1, _TYPE_MESSAGE, TASK_METADATA_MESSAGE),
-            _field_desc("serialized_task", 2, _TYPE_BYTES),
-        ],
-    )
-    decaton_file = _file_desc(
-        "decaton.proto", "com.linecorp.decaton.protocol", [metadata_msg]
-    )
-    internal_file = _file_desc(
-        "decaton_internal.proto",
-        "com.linecorp.decaton.protocol.internal",
-        [request_msg],
-        deps=("decaton.proto",),
-    )
-    return _ld(1, decaton_file) + _ld(1, internal_file)
-
-
-def write_descriptor_set(path: str) -> str:
-    """Write :func:`descriptor_set_bytes` to ``path`` and return it."""
-    with open(path, "wb") as fh:
-        fh.write(descriptor_set_bytes())
-    return path
-
-
-def _decode_task_requests_jvm(df: "DataFrame", wire_col: str) -> "DataFrame":
-    """JVM-side decode via ``from_protobuf`` + the generated descriptor
-    set. Raises if the spark-protobuf jar is absent (caller gates)."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    path = os.path.join(
-        tempfile.gettempdir(), "decaton_spark_descriptor_set.desc"
-    )
-    if not os.path.exists(path):
-        write_descriptor_set(path)
-    parsed = df.withColumn(
-        "_req", from_protobuf(F.col(wire_col), TASK_REQUEST_MESSAGE, path)
-    )
-    out = parsed.select(
-        "*",
-        F.coalesce(F.col("_req.metadata.timestamp_millis"), F.lit(0)).alias(
-            "pb_timestamp_millis"
-        ),
-        F.coalesce(F.col("_req.metadata.source_application_id"), F.lit("")).alias(
-            "pb_source_application_id"
-        ),
-        F.coalesce(F.col("_req.metadata.source_instance_id"), F.lit("")).alias(
-            "pb_source_instance_id"
-        ),
-        F.coalesce(F.col("_req.metadata.retry_count"), F.lit(0)).alias(
-            "pb_retry_count"
-        ),
-        F.coalesce(F.col("_req.metadata.scheduled_time_millis"), F.lit(0)).alias(
-            "pb_scheduled_time_millis"
-        ),
-        F.col("_req.serialized_task").alias("serialized_task"),
-    ).drop("_req")
-    out.schema  # force analysis so a missing jar fails here, not lazily
-    return out
-
-
-def decode_task_requests(
-    df: "DataFrame", wire_col: str = "wire", engine: str = "auto"
-) -> "DataFrame":
+def decode_task_requests(df: "DataFrame", wire_col: str = "wire") -> "DataFrame":
     """Arrow-batched decode of a binary ``DecatonTaskRequest`` column:
-    appends the five metadata columns + ``serialized_task``. Projection
-    only — partitioning is preserved, no shuffle.
-
-    ``engine``: ``"auto"`` tries JVM ``from_protobuf`` (whole-stage
-    codegen, no Python workers) and falls back to the Arrow decoder
-    when the spark-protobuf jar is missing; ``"jvm"`` requires it;
-    ``"python"`` forces the dependency-free path (what this container
-    can run)."""
-    if engine not in ("auto", "jvm", "python"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine in ("auto", "jvm"):
-        try:
-            return _decode_task_requests_jvm(df, wire_col)
-        except Exception:
-            if engine == "jvm":
-                raise
-    return _decode_task_requests_python(df, wire_col)
-
-
-def _decode_task_requests_python(df: "DataFrame", wire_col: str) -> "DataFrame":
-    """The dependency-free Arrow-batched decoder (see module doc)."""
+    appends the five metadata columns (``pb_*``) + ``serialized_task``.
+    Projection only — partitioning is preserved, no shuffle."""
     import pandas as pd  # local import: decode path only
     from pyspark.sql import types as T
 

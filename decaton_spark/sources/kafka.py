@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from decaton_spark.envelope import metadata_to_header_json, parse_header_metadata
+from decaton_spark.envelope import extract_task, metadata_to_header_json
 from decaton_spark.operators.retry import RETRY_TOPIC_SUFFIX
 from decaton_spark.operators.quota import SHAPING_TOPIC_SUFFIX
 
@@ -64,12 +64,14 @@ def read_task_stream(
     topic: str,
     **kwargs,
 ) -> DataFrame:
-    """S1/S2: the streaming task envelope from Kafka."""
+    """S1/S2: the streaming task envelope from Kafka, decoded by
+    :func:`~decaton_spark.envelope.extract_task` (``dt_meta`` header →
+    legacy envelope → raw, with ``task_format`` per record)."""
     reader = spark.readStream.format("kafka")
     for k, v in task_stream_options(bootstrap_servers, topic, **kwargs).items():
         reader = reader.option(k, v)
     raw = reader.load()
-    return parse_header_metadata(raw)
+    return extract_task(raw)
 
 
 def task_sink_frame(df: DataFrame) -> DataFrame:

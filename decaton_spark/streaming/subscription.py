@@ -7,11 +7,15 @@ commit offsets. Spark replaces the whole offset/rebalance machinery
 (SURVEY §2.4 T7/T9-T12) with checkpointed microbatches:
 
     readStream → pipeline (the same batch operators) → foreachBatch
-    {origin sink, retry sink, shaping sink} → checkpoint commit.
+    process_fn → checkpoint commit.
 
-Retry topology mirrors S2/S5: the subscription reads origin + retry
-streams, gates retry rows on scheduled time (T4), and failed rows are
-re-produced to the retry sink with mutated metadata (T3).
+Per microbatch, :class:`Subscription` re-reads its reloadable config,
+holds the trigger while the rate is 0 (paused), drops ignored keys,
+applies the pipeline, hands the frame to ``process_fn``, counts the
+rows in that job, and paces the next batch with a token bucket. Which
+topics the stream reads (origin + retry + shaping) and where failed
+rows go is the caller's stream and ``process_fn``
+(``sources.kafka.read_task_stream``, ``operators.retry``).
 """
 
 from __future__ import annotations
@@ -98,6 +102,8 @@ class Subscription:
     # -- lifecycle (maps SubscriptionStateListener states) -----------------
 
     def _foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        if self.meters is not None:
+            self.meters.partition_state.offset_latest_consumed.set(batch_id)
         cfg = self.config_supplier() if self.config_supplier else self.config
         # rate 0 = Decaton PAUSED (ProcessorProperties rate semantics:
         # 0 "stops processing", RateLimiter.PAUSED): hold the trigger,

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from decaton_spark.envelope import events_to_tasks, parse_header_metadata
+from decaton_spark.envelope import events_to_tasks, extract_task
 from decaton_spark.sources import load_table
 from decaton_spark.sources.kafka import (
     subscription_topics,
@@ -70,7 +70,7 @@ def test_s3_header_round_trips_through_extractor(spark, sf_dir):
     wire = task_sink_frame(tasks).withColumn(
         "timestamp", F.lit(0).cast("timestamp")
     ).withColumn("partition", F.lit(0)).withColumn("offset", F.lit(0).cast("long"))
-    back = parse_header_metadata(wire)
+    back = extract_task(wire)
     orig = {
         (r["key"], r["meta_timestamp_millis"]) for r in tasks.select(
             F.col("key"), "meta_timestamp_millis").collect()
@@ -80,6 +80,56 @@ def test_s3_header_round_trips_through_extractor(spark, sf_dir):
         for r in back.select("key", "meta_timestamp_millis").collect()
     }
     assert got == orig
+
+
+KAFKA_SCHEMA = (
+    "key binary, value binary, ts_ms long,"
+    " headers array<struct<key:string,value:binary>>"
+)
+
+
+def test_extract_task_decodes_kafka_shaped_records(spark):
+    """The frame the Kafka connector hands ``read_task_stream`` (binary
+    key/value, record timestamp, ``includeHeaders`` header array) goes
+    through the header → legacy → raw chain per record. A record whose
+    headers hold no ``dt_meta`` is a raw task stamped with its record
+    timestamp, not a failed query (``element_at`` on the empty header
+    match raises INVALID_ARRAY_INDEX_IN_ELEMENT_AT under ANSI mode)."""
+    ts_ms = 1_704_067_201_000
+    hdr = (
+        b'{"timestamp_millis":5,"source_application_id":"app",'
+        b'"source_instance_id":"i","retry_count":2,"scheduled_time_millis":7}'
+    )
+    legacy = (
+        b'{"metadata":{"timestamp_millis":9,"source_application_id":"old",'
+        b'"source_instance_id":"j","retry_count":1,"scheduled_time_millis":0},'
+        b'"serialized_task":"task"}'
+    )
+    rows = [
+        (b"k0", b"payload", ts_ms, [("dt_meta", hdr)]),
+        (b"k1", b"plain", ts_ms, None),
+        (b"k2", b"other", ts_ms, [("trace", b"x")]),
+        (b"k3", legacy, ts_ms, []),
+    ]
+    frame = spark.createDataFrame(rows, KAFKA_SCHEMA).withColumn(
+        "timestamp", F.timestamp_millis("ts_ms")
+    )
+    out = extract_task(frame)
+    assert dict(out.dtypes)["value"] == "binary"
+    got = {
+        bytes(r["key"]): (
+            r["task_format"], bytes(r["value"]), r["meta_timestamp_millis"],
+            r["meta_source_application_id"], r["meta_source_instance_id"],
+            r["meta_retry_count"], r["meta_scheduled_time_millis"],
+        )
+        for r in out.collect()
+    }
+    assert got == {
+        b"k0": ("header", b"payload", 5, "app", "i", 2, 7),
+        b"k1": ("raw", b"plain", ts_ms, None, None, 0, 0),
+        b"k2": ("raw", b"other", ts_ms, None, None, 0, 0),
+        b"k3": ("legacy", b"task", 9, "old", "j", 1, 0),
+    }
 
 
 def test_write_task_stream_builder_carries_sink_contract(spark, sf_dir):

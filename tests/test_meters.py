@@ -115,6 +115,7 @@ def test_streaming_meter_listener(spark, sf_dir, tmp_path):
             and listener.metrics.task.tasks_processed.count == 0
         ):
             time.sleep(0.5)  # listener delivery is async
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     finally:
         spark.streams.removeListener(listener)
     m = listener.metrics
@@ -123,7 +124,7 @@ def test_streaming_meter_listener(spark, sf_dir, tmp_path):
     # microbatch phases mapped onto the consume-loop sections
     assert m.subscription.process_durations["records"].count > 0
     assert m.subscription.process_durations["poll"].count > 0
-    assert m.partition_state.offset_latest_consumed.value >= 0
+    assert m.partition_state.offset_last_committed.value == q.lastProgress.batchId
 
 
 def test_subscription_drives_state_meters(spark, sf_dir, tmp_path):
@@ -151,3 +152,50 @@ def test_subscription_drives_state_meters(spark, sf_dir, tmp_path):
     assert m.thread_util.processor_processed_time.count == len(seen)
     assert m.task.tasks_process_duration.count == len(seen)
     assert m.partition_state.partition_paused.value == 0
+
+
+def test_offset_gauges_split_consumed_from_committed(spark, tmp_path):
+    """``offset.latest.consumed`` is the batch being processed and
+    ``offset.last.committed`` the last checkpointed one: inside the
+    processor they differ; once the query ends and the listener bus
+    drains, both read the last batch id."""
+    d = tmp_path / "in"
+    for i in range(3):
+        spark.createDataFrame([(f"k{i}", i)], "key string, v long").coalesce(
+            1
+        ).write.parquet(str(d / f"b{i}"))
+    stream = (
+        spark.readStream.schema("key string, v long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/*")
+    )
+    m = Metrics()
+    st = m.partition_state
+    seen: list[tuple[int, float, float]] = []
+
+    def process(df, bid):
+        df.count()
+        seen.append((bid, st.offset_latest_consumed.value, st.offset_last_committed.value))
+
+    listener = MeterListener(m)
+    spark.streams.addListener(listener)
+    try:
+        sub = Subscription(
+            spark,
+            stream,
+            process_fn=process,
+            config=SubscriptionConfig(checkpoint_location=str(tmp_path / "ckpt")),
+            meters=m,
+        )
+        q = sub.start()
+        q.awaitTermination(120)
+        sub.stop()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert [b for b, _, _ in seen] == [0, 1, 2]
+    for bid, consumed, committed in seen[1:]:
+        assert consumed == bid
+        assert committed <= bid - 1
+    assert st.offset_latest_consumed.value == 2
+    assert st.offset_last_committed.value == 2

@@ -222,7 +222,7 @@ def test_envelope_header_roundtrip_property(spark, rows):
     """Header metadata survives JSON envelope encode->parse for
     arbitrary unicode keys and boundary values — the fuzz analog of
     the reference's ProtocolMigrationTest."""
-    from decaton_spark.envelope import metadata_to_header_json, parse_header_metadata
+    from decaton_spark.envelope import extract_task, metadata_to_header_json
 
     df = spark.createDataFrame(
         [
@@ -237,7 +237,7 @@ def test_envelope_header_roundtrip_property(spark, rows):
     )
     hdr = metadata_to_header_json(df)
     stripped = hdr.drop(*[c for c in hdr.columns if c.startswith("meta_")])
-    back = parse_header_metadata(stripped)
+    back = extract_task(stripped)
     want = {
         (r["offset"], r["meta_timestamp_millis"], r["meta_retry_count"],
          r["meta_source_application_id"])

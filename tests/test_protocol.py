@@ -130,43 +130,9 @@ def test_negative_metadata_round_trip(spark):
     assert got["scheduled_time_millis"] == -(1 << 63)
 
 
-def test_descriptor_set_structure():
-    """The hand-built FileDescriptorSet is itself valid wire format:
-    two FileDescriptorProto entries carrying the right file, package,
-    and message names (checked with our own spec parser)."""
-    files = [
-        val
-        for field, _w, val in pb.parse_fields(pb.descriptor_set_bytes())
-        if field == 1
-    ]
-    assert len(files) == 2
-    parsed = []
-    for f in files:
-        name = pkg = None
-        msgs = []
-        for field, _w, val in pb.parse_fields(f):
-            if field == 1:
-                name = val.decode()
-            elif field == 2:
-                pkg = val.decode()
-            elif field == 4:
-                msgs.append(
-                    next(v for fl, _x, v in pb.parse_fields(val) if fl == 1).decode()
-                )
-        parsed.append((name, pkg, msgs))
-    assert parsed[0] == (
-        "decaton.proto", "com.linecorp.decaton.protocol", ["TaskMetadataProto"]
-    )
-    assert parsed[1] == (
-        "decaton_internal.proto",
-        "com.linecorp.decaton.protocol.internal",
-        ["DecatonTaskRequest"],
-    )
-
-
 def test_decode_engine_gating(spark):
-    """engine='python' always works; 'auto' falls back to it when the
-    spark-protobuf jar is absent (this container); 'jvm' raises."""
+    """The Arrow decoder, the one ``DecatonTaskRequest`` decoder,
+    recovers negative int64s and the opaque task bytes."""
     meta = pb.task_metadata_hex(
         timestamp_millis="CAST(5 AS BIGINT)",
         source_application_id="'a'",
@@ -176,15 +142,10 @@ def test_decode_engine_gating(spark):
     )
     task_lit = "'t'"
     df = spark.sql(f"SELECT unhex({pb.task_request_hex(meta, task_lit)}) AS wire")
-    rows = pb.decode_task_requests(df, "wire", engine="auto").collect()
+    rows = pb.decode_task_requests(df, "wire").collect()
     assert rows[0]["pb_retry_count"] == -2
     assert bytes(rows[0]["serialized_task"]) == b"t"
-    rows_py = pb.decode_task_requests(df, "wire", engine="python").collect()
-    assert rows_py[0]["pb_timestamp_millis"] == 5
-    with pytest.raises(Exception):
-        pb.decode_task_requests(df, "wire", engine="jvm").collect()
-    with pytest.raises(ValueError):
-        pb.decode_task_requests(df, "wire", engine="nope")
+    assert rows[0]["pb_timestamp_millis"] == 5
 
 
 def test_parser_skips_unknown_fields():

@@ -44,7 +44,7 @@ meta = pb.task_metadata_hex(
     scheduled_time_millis="CAST(0 AS BIGINT)",
 )
 df = spark.sql("SELECT unhex(" + pb.task_request_hex(meta, "'zp'") + ") AS wire")
-row = pb.decode_task_requests(df, "wire", engine="python").collect()[0]
+row = pb.decode_task_requests(df, "wire").collect()[0]
 assert row["pb_source_application_id"] == "zip-app", row
 assert bytes(row["serialized_task"]) == b"zp", row
 print("PYFILES_SMOKE_OK")

@@ -6,7 +6,9 @@ the Spark analog of Decaton's rolling-restart chaos test).
 
 from __future__ import annotations
 
+import itertools
 import time
+from contextlib import contextmanager
 
 import pytest
 from pyspark.errors import StreamingQueryException
@@ -16,8 +18,9 @@ from decaton_spark.envelope import events_to_tasks
 from decaton_spark.meters import Metrics
 from decaton_spark.operators import Pipeline, compact_tasks, ignore_keys
 from decaton_spark.sources import load_table
-from decaton_spark.streaming import Subscription, streaming_compact
+from decaton_spark.streaming import Subscription, event_time_compact, streaming_compact
 from decaton_spark.streaming.stateful import (
+    streaming_dedup,
     streaming_histogram_quantiles,
     streaming_psi_monitor,
 )
@@ -453,44 +456,138 @@ def test_streaming_psi_monitor_rejects_out_of_range_bucket(spark, tmp_path, bad)
         _run_monitor("psi", stream, str(tmp_path / "ck")).stop()
 
 
-def test_subscription_restart_after_sink_write_without_meters(spark, tmp_path):
-    """A stateful Subscription with no meters and no rate limit restarts
-    after a crash between the sink's write and the checkpoint commit.
-    The replayed batch, which the sink skips, still runs its plan once,
-    so its state store commits; the sink equals a run with no crash."""
-    batches = [
-        [("k1", T0 + 100, 1, "a"), ("k2", T0 + 200, 2, "b")],
-        [("k1", T0 + 300, 3, "c"), ("k3", T0 + 400, 4, "d")],
+STATE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+STATE_STORES = {
+    store: f"org.apache.spark.sql.execution.streaming.state.{cls}"
+    for store, cls in [
+        ("hdfs", "HDFSBackedStateStoreProvider"),
+        ("rocksdb", "RocksDBStateStoreProvider"),
     ]
-    stream = _file_stream(spark, tmp_path / "src", batches, TASK_SCHEMA)
+}
+# each stateful operator, over TASK_SCHEMA rows, with the sink rows a
+# run of CRASH_BATCHES leaves
+CRASH_OPERATORS = {
+    "streaming_compact": (lambda s: streaming_compact(s, window_ms=1_000), 5),
+    "streaming_dedup": (lambda s: streaming_dedup(s, within="1 hour"), 4),
+    "event_time_compact": (
+        lambda s: event_time_compact(
+            s.withColumn("timestamp", F.timestamp_millis("meta_timestamp_millis")),
+            linger="1 second",
+            watermark="0 seconds",
+        ),
+        5,
+    ),
+}
+CRASH_BATCHES = [
+    [("k1", T0 + 100, 1, "a"), ("k2", T0 + 200, 2, "b")],
+    # k4 redelivers k1's payload: streaming_dedup drops it from state
+    [("k1", T0 + 300, 3, "c"), ("k3", T0 + 400, 4, "d"), ("k4", T0 + 500, 5, "a")],
+]
+CRASH_POINTS = ("after_write", "before_write")
 
-    def run(name):
+
+def _crashing_sink(sink, crash):
+    """``sink`` that fails the query in batch 1, before or after its
+    write; nothing of batch 1 is checkpoint-committed and no later batch
+    runs."""
+
+    def write(df, batch_id):
+        if batch_id == 1 and crash == "before_write":
+            raise RuntimeError(crash)
+        sink(df, batch_id)
+        if batch_id == 1 and crash == "after_write":
+            raise RuntimeError(crash)
+
+    return write
+
+
+@contextmanager
+def _spark_conf(spark, confs):
+    """Set session confs for the block (a state-store provider is read
+    at query start), then restore them."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v:
+                spark.conf.set(k, v)
+            else:
+                spark.conf.unset(k)
+
+
+@pytest.fixture(scope="module")
+def crash_stream(spark, tmp_path_factory):
+    """The CRASH_BATCHES file stream, and the sink rows of each
+    (operator, store) run with no crash, filled on first use."""
+    src = tmp_path_factory.mktemp("crash") / "src"
+    return _file_stream(spark, src, CRASH_BATCHES, TASK_SCHEMA), {}
+
+
+def _crash_restart_case(spark, crash_stream, tmp_path, operator, crash, store):
+    """A stateful Subscription with no meters and no rate limit crashes
+    in batch 1 at ``crash`` and restarts; its sink equals a run with no
+    crash. On ``after_write`` the replayed batch, which the sink skips,
+    still runs its plan once, so its state store commits; on
+    ``before_write`` it is rebuilt from batch 0's state and written."""
+    stream, clean = crash_stream
+    build, n_rows = CRASH_OPERATORS[operator]
+
+    def run(root, name, crash=None):
+        sink = idempotent_parquet_sink(str(root / "sink"))
         sub = Subscription(
             spark,
-            streaming_compact(stream, window_ms=1_000),
-            process_fn=idempotent_parquet_sink(str(tmp_path / f"sink-{name}")),
+            build(stream),
+            process_fn=_crashing_sink(sink, crash) if crash else sink,
             config=SubscriptionConfig(
-                checkpoint_location=str(tmp_path / f"ckpt-{name}"),
+                checkpoint_location=str(root / "ckpt"),
                 trigger={"availableNow": True},
             ),
         )
-        sub.start(f"restart-{name}")
-        sub.await_termination(120)
-        sub.stop()
+        with _spark_conf(spark, {STATE_PROVIDER: STATE_STORES[store]}):
+            sub.start(name)
+            try:
+                sub.await_termination(120)
+            finally:
+                sub.stop()
+        return sorted(tuple(r) for r in spark.read.parquet(str(root / "sink")).collect())
 
-    def sink_rows(name):
-        return sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / f"sink-{name}")).collect())
+    if (operator, store) not in clean:
+        clean[(operator, store)] = run(tmp_path / "clean", f"clean-{operator}-{store}")
+    crashed = tmp_path / "crash"
+    with pytest.raises(StreamingQueryException, match=crash):
+        run(crashed, f"crash-{operator}-{store}", crash)
+    ckpt = crashed / "ckpt"
+    assert STATE_STORES[store] in (ckpt / "offsets" / "0").read_text()
+    assert max(int(p.name) for p in (ckpt / "commits").iterdir() if p.name.isdigit()) == 0
+    got = run(crashed, f"restart-{operator}-{store}")  # replays batch 1
+    assert got == clean[(operator, store)]
+    assert len(got) == n_rows
 
-    run("clean")
-    run("crash")
-    commits = tmp_path / "ckpt-crash" / "commits"
-    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
-    assert last == 1
-    (commits / str(last)).unlink()  # the crash: batch 1 is written, not committed
-    (commits / f".{last}.crc").unlink(missing_ok=True)
-    run("crash")  # restart replays batch 1
-    assert sink_rows("crash") == sink_rows("clean")
-    assert len(sink_rows("clean")) == 4
+
+def test_subscription_restart_after_sink_write_without_meters(spark, crash_stream, tmp_path):
+    """The first crash-point case: ``streaming_compact`` on the default
+    (HDFS-backed) state store, crashed after the sink's write of batch 1
+    and before its checkpoint commit."""
+    _crash_restart_case(
+        spark, crash_stream, tmp_path, "streaming_compact", "after_write", "hdfs"
+    )
+
+
+@pytest.mark.parametrize(
+    "operator,crash,store",
+    [
+        case
+        for case in itertools.product(CRASH_OPERATORS, CRASH_POINTS, STATE_STORES)
+        if case != ("streaming_compact", "after_write", "hdfs")
+    ],
+)
+def test_subscription_crash_point_matrix(spark, crash_stream, tmp_path, operator, crash, store):
+    """Every other (operator, crash point, state store) case of
+    ``_crash_restart_case``."""
+    _crash_restart_case(spark, crash_stream, tmp_path, operator, crash, store)
 
 
 def test_streaming_compact_null_payloads_and_timestamps(spark, tmp_path):
@@ -547,15 +644,10 @@ def test_streaming_compact_runs_on_rocksdb(spark, tmp_path):
     rows = _task_rows(spark)
     rows.coalesce(1).write.parquet(str(src / "b0"))
     confs = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        ),
+        STATE_PROVIDER: STATE_STORES["rocksdb"],
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:  # the provider conf is read at query start
+    with _spark_conf(spark, confs):  # the provider conf is read at query start
         stream = spark.readStream.schema(rows.schema).parquet(f"{src}/*")
         q = (
             streaming_compact(stream, window_ms=HOUR_MS)
@@ -568,12 +660,6 @@ def test_streaming_compact_runs_on_rocksdb(spark, tmp_path):
         )
         q.awaitTermination(300)
         q.stop()
-    finally:
-        for k, v in prev.items():
-            if v:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
     got = _final_survivors(spark, "compact_rocks").toPandas()
     survivors = {
         (r["key"], r["window_start_ms"]): r["offset"] for _, r in got.iterrows()
@@ -631,8 +717,6 @@ def test_event_time_compact_drops_late_rows(spark, tmp_path):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from decaton_spark.streaming import event_time_compact
 
     d = tmp_path / "stream"
     d.mkdir()
@@ -910,7 +994,6 @@ def test_streaming_dedup_across_microbatches(spark, tmp_path):
     """dropDuplicatesWithinWatermark state survives microbatch
     boundaries: a payload re-delivered in a later file is dropped,
     fresh payloads pass (the ingest-time form of dedup_exact)."""
-    from decaton_spark.streaming.stateful import streaming_dedup
 
     src = tmp_path / "dedup_src"
     schema = "key string, value string, meta_timestamp_millis long"
@@ -1087,7 +1170,6 @@ def test_streaming_curation_composition(spark, tmp_path):
     from pyspark.sql import functions as FX
 
     from decaton_spark.functions.quality import gopher_filter
-    from decaton_spark.streaming.stateful import streaming_dedup
     from decaton_spark.streaming.subscription import idempotent_parquet_sink
 
     good = "alpha beta gamma delta epsilon zeta eta theta iota kappa"

@@ -50,7 +50,7 @@ meta = pb.task_metadata_hex(
 df = spark.sql(
     "SELECT unhex(" + pb.task_request_hex(meta, "'payload'") + ") AS wire"
 )
-row = pb.decode_task_requests(df, "wire", engine="python").collect()[0]
+row = pb.decode_task_requests(df, "wire").collect()[0]
 assert row["pb_source_application_id"] == "svc", row
 assert row["pb_retry_count"] == 2, row
 assert bytes(row["serialized_task"]) == b"payload", row

@@ -42,7 +42,6 @@ API_SECTIONS = [
     ("Audio", "decaton_spark.multimodal.audio"),
     ("Video", "decaton_spark.multimodal.video"),
     ("Protobuf wire codec", "decaton_spark.protocol"),
-    ("Dynamic properties", "decaton_spark.config"),
     ("Metrics registry", "decaton_spark.meters"),
     ("Workload mirror", "decaton_spark.benchmark"),
 ]
