@@ -5,15 +5,13 @@ Count-Min sketch with xx3 hashing, ε=5e-5, δ=1e-5
 (``processor/.../runtime/internal/KeyCounter.java:76-151``,
 ``PerKeyQuotaManager.java:36-51``).
 
-Two Spark-native forms:
-
-- ``cm_sketch_table``: the sketch *as a DataFrame* — (depth, bucket,
-  count) rows built by one groupBy; estimates come from a min-over-depth
-  join. Fully distributed, mergeable (sketches union by summing
-  buckets), and oracle-checkable because bucket routing uses the
-  cross-engine md5 hash.
-- ``spark_cms``: wraps Spark's built-in ``DataFrame.stat.countMinSketch``
-  (JVM implementation) for driver-side state in streaming quota.
+``cm_sketch_table`` is the sketch *as a DataFrame* — (depth, bucket,
+count) rows built by one groupBy; estimates come from a min-over-depth
+join. Fully distributed, mergeable (sketches union by summing buckets),
+and oracle-checkable because bucket routing uses the cross-engine md5
+hash. The streaming quota keeps its own per-partition sketch in keyed
+state (``streaming.stateful.streaming_quota``), with the same md5
+bucket routing and the reference's conservative update.
 """
 
 from __future__ import annotations
@@ -100,12 +98,6 @@ def cm_estimate(
         {"cnt": 0}
     )
     return joined.groupBy(key_col).agg(F.min("cnt").alias("estimate"))
-
-
-def spark_cms(df: DataFrame, key_col: str = "key", eps: float = 5e-5, delta: float = 1e-5, seed: int = 42):
-    """Spark's JVM CountMinSketch over a column — the streaming-state
-    form (serializable, mergeable across microbatches)."""
-    return df.stat.countMinSketch(key_col, eps=eps, confidence=1 - delta, seed=seed)
 
 
 def cm_params(epsilon: float = 5e-5, delta: float = 1e-5) -> tuple[int, int]:

@@ -16,9 +16,10 @@ number but WindowExec sorts every row inside each shuffle partition;
 the groupBy form partial-aggregates map-side, shuffles only the
 (key, window) pairs for the dim side, and skips the sort — the cheaper
 plan on exactly the skewed-key distribution quota exists for. The
-bounded-memory sketch variant for streaming state wraps Spark's own
-CountMinSketch (``df.stat.countMinSketch``) — see
-``decaton_spark.functions.sketches``.
+bounded-memory sketch variant is ``functions.sketches.cm_sketch_table``
+in batch and ``streaming.stateful.streaming_quota`` on a stream, which
+keeps a conservative-update Count-Min sketch per partition in keyed
+state.
 """
 
 from __future__ import annotations

@@ -21,9 +21,9 @@ state, which update mode can fold; the two counting monitors spell
 their count vector as one conditional count per bucket, since update
 mode allows no aggregate over an aggregate.
 
-The other operators are each a single ``applyInPandasWithState`` form
-(the ``mapGroupsWithState`` model of the Structured Streaming paper),
-because their state is not such a fold:
+The other operators are keyed folds (the ``mapGroupsWithState`` model
+of the Structured Streaming paper), because their state is not such a
+fold:
 
 - ``streaming_kmv`` keeps a bottom-k set; Spark has no bounded
   bottom-k aggregate, and ``theta_sketch_agg`` would change the
@@ -34,6 +34,15 @@ because their state is not such a fold:
   order-free aggregate expresses;
 - the rest hold timers, per-row verdicts or buffers.
 
+Each of them is only a step function; the one helper ``_fold_by_key``
+runs it as the single ``applyInPandasWithState`` call and owns the
+``GroupState`` protocol: reading and writing the state, assembling and
+ordering a key's rows, timers, and the clock. The clock is the
+microbatch timestamp, which Spark restores from the offset log on
+replay, so a replayed batch flushes and releases exactly what its first
+run did; timers are ``GroupStateTimeout.ProcessingTimeTimeout``, fired
+by no-data microbatches.
+
 The per-key hash shuffle of groupByKey IS the sub-partitioner (P1);
 rows within a (key, batch) are processed in (partition, offset) order,
 preserving Decaton's PROCESS_ORDERING invariant; keys are independent,
@@ -41,20 +50,19 @@ giving SERIAL_PROCESSING per key.
 
 All of them run unchanged on either state-store provider — the default
 HDFS-backed store or RocksDB
-(``spark.sql.streaming.stateStore.providerClass``); timers are
-``GroupStateTimeout.ProcessingTimeTimeout`` emulations, fired by
-no-data microbatches.
+(``spark.sql.streaming.stateStore.providerClass``).
 """
 
 from __future__ import annotations
 
 import functools
-from collections.abc import Iterator
+import math
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from decaton_spark.functions import sketches as sk
 from decaton_spark.functions.stats import psi_from_counts, welch_ttest
@@ -93,6 +101,68 @@ def _cm_bump(sketch: list[int], bks: tuple[int, ...], width: int) -> int:
         idx = d * width + b
         sketch[idx] = max(sketch[idx], new)
     return new
+
+
+def _fold_by_key(
+    df: DataFrame,
+    by: list[str],
+    *,
+    order_by: list[str] | None,
+    state_schema: str,
+    out_schema: str,
+    step: Callable,
+    mode: str = "append",
+    timer: bool = False,
+) -> DataFrame:
+    """Group ``df`` by ``by`` and fold each key's rows with ``step`` —
+    the one ``applyInPandasWithState`` call of this module.
+
+    ``step(key, state, rows, now_ms) -> (new_state, out, timeout_ms)``
+    is a pure function of its arguments:
+
+    - ``state`` is the key's state tuple, or None when it has none;
+    - ``rows`` is the key's rows of this microbatch as one frame, sorted
+      by ``order_by`` (arrival order when None); it is empty when a
+      timer fired;
+    - ``now_ms`` is the microbatch timestamp, constant for the batch and
+      restored from the offset log when the batch is replayed;
+    - ``new_state`` replaces the state, and None removes it;
+    - ``out`` is a dict of output columns, emitted only when it has rows;
+    - ``timeout_ms`` (``timer`` folds only) calls ``step`` again, with no
+      rows, once that much processing time has passed; None sets no
+      timer.
+
+    The closure ships to Python workers, so it must capture no
+    DataFrame (they do not pickle)."""
+
+    def update(key, pdfs, state):
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        if order_by:
+            rows = rows.sort_values(order_by)
+        new, out, timeout_ms = step(
+            key, state.getOption, rows, state.getCurrentProcessingTimeMs()
+        )
+        if new is not None:
+            state.update(new)
+            if timeout_ms is not None:
+                state.setTimeoutDuration(timeout_ms)
+        elif state.exists:
+            state.remove()
+        frame = pd.DataFrame(out)
+        if len(frame):
+            yield frame
+
+    return df.groupBy(*by).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if timer
+            else GroupStateTimeout.NoTimeout
+        ),
+    )
 
 
 def streaming_compact(
@@ -170,43 +240,33 @@ def ordered_process(
     SERIAL_PROCESSING (``SerialProcessing.java:47-60``) holds by
     construction: a key lives in exactly one state-store partition and
     its update function runs single-threaded.
-    """
-    out_schema = (
-        f"{key_col} string, offset long, prev_offset long, regressed boolean"
-    )
-    state_schema = "last_offset long"
 
-    def update(key, pdfs, state: GroupState):
-        last = state.get[0] if state.exists else -1
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        batch = batch.sort_values(["partition", "offset"])
+    State is one long per key ever seen: nothing evicts a key, so state
+    grows with the key cardinality of the whole stream.
+    """
+
+    def step(key, state, rows, now_ms):
+        last = state[0] if state else -1
         prevs, regressed = [], []
-        for off in batch["offset"]:
+        for off in rows["offset"]:
             prevs.append(last)
             regressed.append(off <= last)
             last = int(off)
-        state.update((last,))
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                "offset": batch["offset"].astype("int64").values,
-                "prev_offset": prevs,
-                "regressed": regressed,
-            }
-        )
+        out = {
+            key_col: key[0],
+            "offset": rows["offset"].astype("int64").values,
+            "prev_offset": prevs,
+            "regressed": regressed,
+        }
+        return (last,), out, None
 
-    return (
-        tasks.select(key_col, "partition", "offset")
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        tasks.select(key_col, "partition", "offset"),
+        [key_col],
+        order_by=["partition", "offset"],
+        state_schema="last_offset long",
+        out_schema=f"{key_col} string, offset long, prev_offset long, regressed boolean",
+        step=step,
     )
 
 
@@ -235,23 +295,16 @@ def streaming_quota(
     of wiping the active one (arrival order within a microbatch is
     offset order, not timestamp order).
     """
-    out_schema = "key string, offset long, estimate long, quota_verdict string"
-    state_schema = "win long, counts array<long>, prev_counts array<long>"
 
-    def update(pkey, pdfs, state: GroupState):
+    def step(pkey, state, rows, now_ms):
         zeros = [0] * (depth * width)
-        if state.exists:
-            win, counts, prev = state.get
-            counts, prev = list(counts), list(prev)
+        if state:
+            win, counts, prev = state[0], list(state[1]), list(state[2])
         else:
             win, counts, prev = -1, list(zeros), list(zeros)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        batch = batch.sort_values("offset")
         out_rows = {"key": [], "offset": [], "estimate": [], "quota_verdict": []}
         for key, off, ts in zip(
-            batch["key"], batch["offset"], batch["meta_timestamp_millis"]
+            rows["key"], rows["offset"], rows["meta_timestamp_millis"]
         ):
             w = (int(ts) // window_ms) * window_ms
             if w > win:  # forward rotation only
@@ -271,19 +324,15 @@ def streaming_quota(
             out_rows["quota_verdict"].append(
                 "shape" if est >= quota_per_window else "process"
             )
-        state.update((win, counts, prev))
-        yield pd.DataFrame(out_rows)
+        return (win, counts, prev), out_rows, None
 
-    return (
-        tasks.select("partition", "key", "offset", "meta_timestamp_millis")
-        .groupBy("partition")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        tasks.select("partition", "key", "offset", "meta_timestamp_millis"),
+        ["partition"],
+        order_by=["offset"],
+        state_schema="win long, counts array<long>, prev_counts array<long>",
+        out_schema="key string, offset long, estimate long, quota_verdict string",
+        step=step,
     )
 
 
@@ -308,80 +357,55 @@ def streaming_batch(
     re-flushes instead of losing the pending batch (at-least-once).
 
     Requires no-data microbatches (Spark default) so linger flushes
-    fire without new input.
+    fire without new input. The linger clock is the microbatch
+    timestamp, so a batch replayed after a restart flushes exactly what
+    its first run flushed; a buffer whose linger passed while the query
+    was down flushes in the first batch after the replay.
     """
-    import time as _time
 
-    out_schema = (
-        "partition int, batch_seq long, batch_size long, "
-        "first_offset long, last_offset long, reason string"
-    )
-    state_schema = "offs array<long>, first_buffered_ms long, batch_seq long"
+    def step(pkey, state, rows, now_ms):
+        pending, first_ms, seq = (
+            ([int(x) for x in state[0]], int(state[1]), int(state[2]))
+            if state
+            else ([], 0, 0)
+        )
+        if not pending:
+            first_ms = now_ms
+        pending.extend(int(x) for x in rows["offset"])
 
-    def update(
-        pkey: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            st_offs, first_ms, seq = state.get
-            pending = [int(x) for x in st_offs]
-            first_ms = int(first_ms)
-            seq = int(seq)
-        else:
-            pending, first_ms, seq = [], 0, 0
-
-        new = pd.concat(list(pdfs), ignore_index=True)
-        if len(new):
-            new = new.sort_values("offset")
-            if not pending:
-                first_ms = int(_time.time() * 1000)
-            pending.extend(int(x) for x in new["offset"])
-
-        now_ms = int(_time.time() * 1000)
-        flushed = {
-            "partition": [], "batch_seq": [], "batch_size": [],
-            "first_offset": [], "last_offset": [], "reason": [],
-        }
-
-        def emit(batch: list[int], reason: str) -> None:
-            nonlocal seq
-            flushed["partition"].append(pkey[0])
-            flushed["batch_seq"].append(seq)
-            flushed["batch_size"].append(len(batch))
-            flushed["first_offset"].append(batch[0])
-            flushed["last_offset"].append(batch[-1])
-            flushed["reason"].append(reason)
-            seq += 1
-
+        flushed = []
         while len(pending) >= capacity:  # size flushes first, full batches
-            emit(pending[:capacity], "size")
+            flushed.append((pending[:capacity], "size"))
             pending = pending[capacity:]
             first_ms = now_ms  # remainder restarts its linger clock
         if pending and now_ms - first_ms >= linger_ms:
-            emit(pending, "linger")
+            flushed.append((pending, "linger"))
             pending = []
 
+        out = {
+            "partition": pkey[0],
+            "batch_seq": list(range(seq, seq + len(flushed))),
+            "batch_size": [len(b) for b, _ in flushed],
+            "first_offset": [b[0] for b, _ in flushed],
+            "last_offset": [b[-1] for b, _ in flushed],
+            "reason": [reason for _, reason in flushed],
+        }
+        seq += len(flushed)
         if pending:
-            state.update((pending, first_ms, seq))
-            state.setTimeoutDuration(max(1, first_ms + linger_ms - now_ms))
-        elif state.exists:
-            state.update(([], 0, seq))  # keep batch_seq monotonic
-            state.setTimeoutDuration(24 * 3_600_000)
+            return (pending, first_ms, seq), out, max(1, first_ms + linger_ms - now_ms)
+        return ([], 0, seq), out, None  # keep batch_seq monotonic
 
-        if flushed["partition"]:
-            yield pd.DataFrame(flushed)
-
-    return (
-        tasks.select("partition", "offset")
-        .groupBy("partition")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    return _fold_by_key(
+        tasks.select("partition", "offset"),
+        ["partition"],
+        order_by=["offset"],
+        state_schema="offs array<long>, first_buffered_ms long, batch_seq long",
+        out_schema=(
+            "partition int, batch_seq long, batch_size long, "
+            "first_offset long, last_offset long, reason string"
+        ),
+        step=step,
+        timer=True,
     )
 
 
@@ -404,65 +428,42 @@ def streaming_scheduled(
     operator pointed at the retry topic).
 
     Requires no-data microbatches (Spark default) so timeouts fire
-    without new input.
+    without new input. "Now" is the microbatch timestamp
+    (``emitted_at_millis``), so a batch replayed after a restart
+    releases exactly what its first run released; tasks that fell due
+    while the query was down release in the first batch after the
+    replay.
     """
-    import time as _time
 
-    out_schema = (
-        f"{key_col} string, offset long, scheduled_time_millis long, "
-        "emitted_at_millis long"
-    )
-    state_schema = "offs array<long>, scheds array<long>"
+    def step(key, state, rows, now_ms):
+        old = zip(*state) if state else []
+        new = zip(rows["offset"], rows["meta_scheduled_time_millis"])
+        held = [(int(o), int(s)) for o, s in [*old, *new]]
+        due = sorted((t for t in held if t[1] <= now_ms), key=lambda t: (t[1], t[0]))
+        pending = [t for t in held if t[1] > now_ms]
+        out = {
+            key_col: key[0],
+            "offset": [o for o, _ in due],  # due-time order per key
+            "scheduled_time_millis": [s for _, s in due],
+            "emitted_at_millis": now_ms,
+        }
+        if not pending:
+            return None, out, None
+        # fire again when the earliest pending task is due
+        new = ([o for o, _ in pending], [s for _, s in pending])
+        return new, out, max(1, min(s for _, s in pending) - now_ms)
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        offs: list[int] = []
-        scheds: list[int] = []
-        if state.exists:
-            st_offs, st_scheds = state.get
-            offs.extend(int(x) for x in st_offs)
-            scheds.extend(int(x) for x in st_scheds)
-        for pdf in pdfs:
-            offs.extend(int(x) for x in pdf["offset"])
-            scheds.extend(int(x) for x in pdf["meta_scheduled_time_millis"])
-
-        now_ms = int(_time.time() * 1000)
-        due = [(o, s) for o, s in zip(offs, scheds) if s <= now_ms]
-        pending = [(o, s) for o, s in zip(offs, scheds) if s > now_ms]
-
-        if pending:
-            state.update(
-                ([o for o, _ in pending], [s for _, s in pending])
-            )
-            # fire again when the earliest pending task is due
-            state.setTimeoutDuration(max(1, min(s for _, s in pending) - now_ms))
-        elif state.exists:
-            state.remove()
-
-        if due:
-            due.sort(key=lambda t: (t[1], t[0]))  # due-time order per key
-            yield pd.DataFrame(
-                {
-                    key_col: key[0],
-                    "offset": [o for o, _ in due],
-                    "scheduled_time_millis": [s for _, s in due],
-                    "emitted_at_millis": now_ms,
-                }
-            )
-
-    return (
-        tasks.select(key_col, "offset", "meta_scheduled_time_millis")
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    return _fold_by_key(
+        tasks.select(key_col, "offset", "meta_scheduled_time_millis"),
+        [key_col],
+        order_by=None,
+        state_schema="offs array<long>, scheds array<long>",
+        out_schema=(
+            f"{key_col} string, offset long, scheduled_time_millis long, "
+            "emitted_at_millis long"
+        ),
+        step=step,
+        timer=True,
     )
 
 
@@ -510,11 +511,12 @@ def streaming_heavy_hitters(
     — there a crossing routes traffic to the shaping topic; here it
     surfaces as an alert row for downstream sinks/dashboards).
 
-    State per Kafka partition (Decaton's sketch scope) is bounded:
-    depth×width sketch longs plus the alerted-key set, which grows
-    only with keys that actually crossed (the alert set IS the
-    output, so it is bounded by the true burst population, not key
-    cardinality). Conservative update keeps estimates tight; CM never
+    State per Kafka partition (Decaton's sketch scope) is depth×width
+    sketch longs plus the alerted-key set. Neither is bounded over the
+    life of the stream: the counts are never decayed or windowed, so
+    estimates only grow with its length, and the alerted set keeps every
+    key that ever crossed — on a long enough stream, that is every key.
+    Conservative update keeps estimates tight; CM never
     underestimates, so no true heavy key is missed — false alerts are
     possible only via hash collisions and shrink with ``width``
     (documented accuracy contract, same as the quota path).
@@ -522,41 +524,29 @@ def streaming_heavy_hitters(
     Emits (key, offset, estimate) with ``offset`` = the record that
     tripped the crossing, in per-partition arrival order.
     """
-    out_schema = "key string, offset long, estimate long"
-    state_schema = "counts array<long>, alerted array<string>"
 
-    def update(pkey, pdfs, state: GroupState):
-        if state.exists:
-            counts, alerted = state.get
-            counts, seen = list(counts), set(alerted)
+    def step(pkey, state, rows, now_ms):
+        if state:
+            counts, seen = list(state[0]), set(state[1])
         else:
             counts, seen = [0] * (depth * width), set()
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        batch = batch.sort_values("offset")
         out = {"key": [], "offset": [], "estimate": []}
-        for key, off in zip(batch["key"], batch["offset"]):
+        for key, off in zip(rows["key"], rows["offset"]):
             est = _cm_bump(counts, _cm_buckets(key, depth, width), width)
             if est >= threshold and key not in seen:
                 seen.add(key)
                 out["key"].append(key)
                 out["offset"].append(int(off))
                 out["estimate"].append(est)
-        state.update((counts, sorted(seen)))
-        if out["key"]:
-            yield pd.DataFrame(out)
+        return (counts, sorted(seen)), out, None
 
-    return (
-        tasks.select("partition", "key", "offset")
-        .groupBy("partition")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        tasks.select("partition", "key", "offset"),
+        ["partition"],
+        order_by=["offset"],
+        state_schema="counts array<long>, alerted array<string>",
+        out_schema="key string, offset long, estimate long",
+        step=step,
     )
 
 
@@ -578,32 +568,18 @@ def streaming_zscore_alerts(
     ops the Catalyst expression performs — so alerts fire on exactly
     the batch rows (asserted in tests/test_streaming_invariants.py).
 
-    State per user is n longs — bounded at any user cardinality via
-    the state store. Input rows are ordered (ts, event_id) within each
+    State is at most n longs per user, but one row per user ever seen:
+    nothing evicts a user, so state grows with the user cardinality of
+    the whole stream. Input rows are ordered (ts, event_id) within each
     microbatch; cross-batch order is the source's append order, same
     contract as every per-key operator here (SURVEY §2.4).
     """
-    src = (
-        events.filter(F.col("value").isNotNull())
-        .select(
-            "user_id", "ts", "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("xv"),
-        )
-    )
-    out_schema = "event_id long, user_id long, zscore double"
-    state_schema = "xs array<long>"
 
-    def update(key, pdfs, state: GroupState):
-        import math
-
-        xs = list(state.get[0]) if state.exists else []
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        batch = batch.sort_values(["ts", "event_id"])
+    def step(key, state, rows, now_ms):
+        xs = list(state[0]) if state else []
         out = {"event_id": [], "user_id": [], "zscore": []}
         uid = int(key[0])
-        for eid, xv in zip(batch["event_id"], batch["xv"]):
+        for eid, xv in zip(rows["event_id"], rows["xv"]):
             x = int(xv)
             xs.append(x)
             if len(xs) > n:
@@ -618,16 +594,18 @@ def streaming_zscore_alerts(
                         out["event_id"].append(int(eid))
                         out["user_id"].append(uid)
                         out["zscore"].append(z)
-        state.update((xs,))
-        if out["event_id"]:
-            yield pd.DataFrame(out)
+        return (xs,), out, None
 
-    return src.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_by_key(
+        events.filter(F.col("value").isNotNull()).select(
+            "user_id", "ts", "event_id",
+            F.round(F.col("value") * 100).cast("long").alias("xv"),
+        ),
+        ["user_id"],
+        order_by=["ts", "event_id"],
+        state_schema="xs array<long>",
+        out_schema="event_id long, user_id long, zscore double",
+        step=step,
     )
 
 
@@ -655,42 +633,39 @@ def streaming_lsh_candidates(
     duplicate verification work, never correctness.
 
     State per bucket is the member id list: total state = one long per
-    (doc, band) — 4 longs/doc at the defaults, watermark/TTL-evictable
-    at cluster scale if the dedup horizon is bounded."""
+    (doc, band) — 4 longs/doc at the defaults — and nothing evicts it,
+    so state grows with the number of documents in the whole stream.
+    Docs are indexed in arrival order."""
     from decaton_spark.functions.dedup import minhash_band_signatures
 
     stacked = minhash_band_signatures(
         docs, text_col=text_col, id_col=id_col, k=k, bands=bands
     )
-    out_schema = "id_a long, id_b long, band int"
-    state_schema = "members array<long>"
     id_name = stacked.columns[0]  # plain string: the closure must not
     # capture the DataFrame itself (unpicklable on workers)
 
-    def update(key, pdfs, state: GroupState):
+    def step(key, state, rows, now_ms):
         band = int(key[0])
-        members: list[int] = list(state.get[0]) if state.exists else []
+        members: list[int] = list(state[0]) if state else []
         out = {"id_a": [], "id_b": [], "band": []}
-        for pdf in pdfs:
-            for new_id in pdf[id_name]:
-                new_id = int(new_id)
-                if new_id in members:
-                    continue  # re-delivery: already indexed
-                for m in members:
-                    out["id_a"].append(min(m, new_id))
-                    out["id_b"].append(max(m, new_id))
-                    out["band"].append(band)
-                members.append(new_id)
-        state.update((members,))
-        if out["id_a"]:
-            yield pd.DataFrame(out)
+        for new_id in rows[id_name]:
+            new_id = int(new_id)
+            if new_id in members:
+                continue  # re-delivery: already indexed
+            for m in members:
+                out["id_a"].append(min(m, new_id))
+                out["id_b"].append(max(m, new_id))
+                out["band"].append(band)
+            members.append(new_id)
+        return (members,), out, None
 
-    return stacked.groupBy("band", "sig").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_by_key(
+        stacked,
+        ["band", "sig"],
+        order_by=None,
+        state_schema="members array<long>",
+        out_schema="id_a long, id_b long, band int",
+        step=step,
     )
 
 
@@ -718,50 +693,37 @@ def streaming_kmv(
     """
     import hashlib
 
-    out_schema = (
-        f"{group_col} string, n_in_sketch long, kmv_distinct_est long"
-    )
-    state_schema = "hs array<long>, vs array<string>"
     scale = 16**ndigits
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            hs, vs = state.get
-            pairs = set(zip(hs, vs))
-        else:
-            pairs = set()
+    def step(key, state, rows, now_ms):
+        pairs = set(zip(*state)) if state else set()
         before = set(pairs)
-        for batch in pdfs:
-            for v in batch[value_col]:
-                if v is None or (isinstance(v, float) and pd.isna(v)):
-                    continue  # COUNT DISTINCT semantics: NULL is not a value
-                v = str(v)
-                h = int(hashlib.md5(v.encode()).hexdigest()[:ndigits], 16)
-                pairs.add((h, v))
+        for v in rows[value_col]:
+            if v is None or (isinstance(v, float) and pd.isna(v)):
+                continue  # COUNT DISTINCT semantics: NULL is not a value
+            v = str(v)
+            h = int(hashlib.md5(v.encode()).hexdigest()[:ndigits], 16)
+            pairs.add((h, v))
         bottom = sorted(pairs)[:k]
         if not bottom:
-            return  # only NULLs seen: the group has no sketch yet
-        if set(bottom) == before and state.exists:
-            return  # sketch unchanged: nothing to emit
-        state.update(([h for h, _ in bottom], [v for _, v in bottom]))
+            return None, {}, None  # only NULLs seen: the group has no sketch yet
+        if set(bottom) == before:
+            return state, {}, None  # sketch unchanged: nothing to emit
         n = len(bottom)
         # max(kth, 1): an all-zero md5 prefix on the k-th hash would be
         # a ZeroDivisionError killing the whole streaming query.
         est = n if n < k else ((k - 1) * scale) // max(bottom[k - 1][0], 1)
-        yield pd.DataFrame(
-            {group_col: [key[0]], "n_in_sketch": [n], "kmv_distinct_est": [est]}
-        )
+        new = ([h for h, _ in bottom], [v for _, v in bottom])
+        return new, {group_col: [key[0]], "n_in_sketch": [n], "kmv_distinct_est": [est]}, None
 
-    return (
-        events.select(group_col, value_col)
-        .groupBy(group_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        events.select(group_col, value_col),
+        [group_col],
+        order_by=None,
+        state_schema="hs array<long>, vs array<string>",
+        out_schema=f"{group_col} string, n_in_sketch long, kmv_distinct_est long",
+        step=step,
+        mode="update",
     )
 
 
@@ -845,7 +807,8 @@ def streaming_cusum(
     per group — so the control chart streams with O(1) state
     (``s = P − min(0, minP)``, alarm while s ≥ h; the batch operator's
     exact arithmetic). Baselines come from a per-group calibration
-    pass, like the histogram bounds and the quantizer stores.
+    pass, like the histogram bounds and the quantizer stores; rows of
+    uncalibrated groups are dropped before the shuffle.
 
     Bucket rows must arrive in bucket order per group (the upstream is
     a windowed count aggregation, which emits in watermark order);
@@ -857,69 +820,44 @@ def streaming_cusum(
     first_alarm_bucket_ms) after each microbatch that advances a
     group.
     """
-    out_schema = (
-        f"{group_col} string, last_bucket_ms long, s long,"
-        " n_alarm_buckets long, first_alarm_bucket_ms long"
-    )
-    state_schema = "lb long, p long, pmin long, na long, fb long"
 
-    def update(key, pdfs, state: GroupState):
-        if key[0] not in baselines:
-            return
+    def step(key, state, rows, now_ms):
         c = baselines[key[0]] + k
-        if state.exists:
-            lb, p, pmin, na, fb = state.get
-        else:
-            lb, p, pmin, na, fb = None, 0, 0, 0, None
-        rows = []
-        for batch in pdfs:
-            for b, x in zip(batch[bucket_col], batch[x_col]):
-                rows.append((int(b), int(x)))
-        if not rows:
-            return
-        rows.sort()
-
-        def step(b, x):
-            nonlocal p, pmin, na, fb
-            p += x - c
-            pmin = min(pmin, p)
-            s = p - min(0, pmin)
-            if s >= h:
-                na += 1
-                if fb is None:
-                    fb = b
-            return s
-
-        s = None
-        for b, x in rows:
-            if lb is not None:
-                g = lb + bucket_ms
-                while g < b:  # synthesize empty hours
-                    step(g, 0)
-                    g += bucket_ms
-            s = step(b, x)
+        lb, p, pmin, na, fb = state or (None, 0, 0, 0, None)
+        for b, x in zip(rows[bucket_col], rows[x_col]):
+            b, x = int(b), int(x)
+            gaps = [] if lb is None else range(lb + bucket_ms, b, bucket_ms)
+            for g, v in [*((g, 0) for g in gaps), (b, x)]:  # empty hours first
+                p += v - c
+                pmin = min(pmin, p)
+                s = p - min(0, pmin)
+                if s >= h:
+                    na += 1
+                    if fb is None:
+                        fb = g
             lb = b
-        state.update((lb, p, pmin, na, fb))
-        yield pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "last_bucket_ms": [lb],
-                "s": [s],
-                "n_alarm_buckets": [na],
-                "first_alarm_bucket_ms": [fb],
-            }
-        )
+        out = {
+            group_col: [key[0]],
+            "last_bucket_ms": [lb],
+            "s": [s],
+            "n_alarm_buckets": [na],
+            "first_alarm_bucket_ms": [fb],
+        }
+        return (lb, p, pmin, na, fb), out, None
 
-    return (
-        events.select(group_col, bucket_col, x_col)
-        .groupBy(group_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        events.where(F.col(group_col).isin(list(baselines))).select(
+            group_col, bucket_col, x_col
+        ),
+        [group_col],
+        order_by=[bucket_col, x_col],
+        state_schema="lb long, p long, pmin long, na long, fb long",
+        out_schema=(
+            f"{group_col} string, last_bucket_ms long, s long,"
+            " n_alarm_buckets long, first_alarm_bucket_ms long"
+        ),
+        step=step,
+        mode="update",
     )
 
 

@@ -18,7 +18,13 @@ from decaton_spark.envelope import events_to_tasks
 from decaton_spark.meters import Metrics
 from decaton_spark.operators import Pipeline, compact_tasks, ignore_keys
 from decaton_spark.sources import load_table
-from decaton_spark.streaming import Subscription, event_time_compact, streaming_compact
+from decaton_spark.streaming import (
+    Subscription,
+    event_time_compact,
+    streaming_batch,
+    streaming_compact,
+    streaming_scheduled,
+)
 from decaton_spark.streaming.stateful import (
     streaming_dedup,
     streaming_histogram_quantiles,
@@ -912,6 +918,100 @@ def test_streaming_scheduled_holds_until_due(spark, tmp_path):
         )
     # the due k1 task was not blocked behind the scheduled one
     assert got[1]["emitted_at_millis"] < got[2]["scheduled_time_millis"]
+
+
+HOLD_MS = 8_000  # linger / due horizon: longer than a first run's two batches
+# timer fold: (schema, its two input batches given the due time, the
+# fold, its sink rows in a run with no crash, emitted_at dropped)
+TIMER_FOLDS = {
+    "streaming_batch": (
+        "partition int, offset long",
+        lambda due: [[(0, 1), (0, 2)], [(0, 3)]],
+        lambda s: streaming_batch(s, capacity=4, linger_ms=HOLD_MS),
+        lambda due: [(0, 0, 3, 1, 3, "linger")],
+    ),
+    "streaming_scheduled": (
+        "key string, offset long, meta_scheduled_time_millis long",
+        lambda due: [[("k", 1, due), ("k", 2, due)], [("k", 3, due)]],
+        streaming_scheduled,
+        lambda due: [("k", 1, due), ("k", 2, due), ("k", 3, due)],
+    ),
+}
+
+
+@pytest.mark.parametrize("fold", sorted(TIMER_FOLDS))
+def test_timer_fold_replays_on_batch_clock(spark, tmp_path, fold):
+    """A timer fold that crashes after its sink wrote batch 1, and
+    restarts once the linger or due time has passed, delivers offsets
+    1-3 as a run with no crash does. The replayed batch 1 decides on its
+    own timestamp, restored from the offset log, so it flushes or
+    releases nothing, as its first run did; the held tasks reach the
+    sink in the next batch. On the wall clock the replay released them
+    into batch 1, which the sink skips as written, and they were lost."""
+    schema, batches, build, clean = TIMER_FOLDS[fold]
+    due = int(time.time() * 1000) + HOLD_MS
+    stream = build(_file_stream(spark, tmp_path / "src", batches(due), schema))
+    written: dict[int, list] = {}
+
+    def sink(df, batch_id):
+        rows = [tuple(r) for r in df.collect()]  # runs the plan: state commits
+        written.setdefault(batch_id, rows)  # a replayed batch is not rewritten
+
+    def crash_after_batch_1(df, batch_id):
+        sink(df, batch_id)
+        if batch_id == 1:
+            raise RuntimeError("after_write")
+
+    def start(process):
+        return (
+            stream.writeStream.foreachBatch(process)
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(processingTime="500 milliseconds")
+            .start()
+        )
+
+    def delivered():
+        return sorted(r for rows in written.values() for r in rows)
+
+    with pytest.raises(StreamingQueryException, match="after_write"):
+        start(crash_after_batch_1).awaitTermination(120)
+    time.sleep(HOLD_MS / 1000 + 1)  # the linger / due time passes while down
+    q = start(sink)
+    try:
+        deadline = time.time() + 45
+        while time.time() < deadline and len(delivered()) < len(clean(due)):
+            time.sleep(0.5)
+    finally:
+        q.stop()
+
+    got = delivered()
+    if fold == "streaming_scheduled":
+        assert all(r[3] >= r[2] for r in got), "emitted before its due time"
+        got = [r[:3] for r in got]
+    assert got == clean(due)
+
+
+def test_streaming_batch_seq_counts_on_after_an_exact_flush(spark, tmp_path):
+    """A partition whose first microbatch flushes exactly ``capacity``
+    tasks keeps its batch_seq in state: its next flush is numbered 1,
+    not 0 again."""
+    src, out = tmp_path / "src", []
+    for i in range(2):
+        spark.createDataFrame(
+            [(0, 4 * i + j) for j in range(4)], "partition int, offset long"
+        ).coalesce(1).write.parquet(str(src / f"b{i}"))
+        stream = spark.readStream.schema("partition int, offset long").parquet(f"{src}/*")
+        q = (
+            streaming_batch(stream, capacity=4)
+            .writeStream.foreachBatch(lambda df, bid: out.extend(df.collect()))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(once=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        q.stop()
+    assert [(r["batch_seq"], r["first_offset"]) for r in out] == [(0, 0), (1, 4)]
 
 
 def test_full_topology_end_to_end(spark, sf_dir, task_stream_dir, tmp_path):

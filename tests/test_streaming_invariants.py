@@ -694,6 +694,10 @@ def test_streaming_cusum_equals_batch(spark, sf_dir, tmp_path):
             .parquet(str(d))
         )
         time.sleep(1.1)
+    # a group with no baseline: its rows must emit nothing
+    spark.createDataFrame(
+        [("uncalibrated", lo, 5), ("uncalibrated", hi, 7)], cb.schema
+    ).coalesce(1).write.mode("append").parquet(str(d))
 
     stream = (
         spark.readStream.schema("event_type string, bucket_ms long, x long")
@@ -730,6 +734,7 @@ def test_streaming_cusum_equals_batch(spark, sf_dir, tmp_path):
         r["event_type"]: (r["n_alarm_buckets"], r["first_alarm_bucket_ms"])
         for r in batch
     }
+    assert "uncalibrated" not in last
     assert last == exp
 
 
