@@ -24,8 +24,10 @@ workers processed.
 from __future__ import annotations
 
 import asyncio
+import threading
 import time
 from collections.abc import Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -95,6 +97,30 @@ def _drive_io_slots(latencies_ms: Iterable[float], concurrency: int) -> int:
     return done
 
 
+def _drive_io_threads(latencies_ms: Iterable[float], concurrency: int) -> int:
+    """Wait out each latency (ms) with a blocking sleep on one pool of
+    ``concurrency`` threads; return how many completed.
+
+    The reference's THREAD_POOL runtime. ``latencies_ms`` is read
+    lazily, one item per free thread, so a partition's Arrow batches
+    stream through one pool and no thread idles at a batch boundary.
+    Returns once the input is exhausted and every sleep has ended.
+    """
+    free = threading.Semaphore(concurrency)
+
+    def wait(ms: float) -> None:
+        time.sleep(ms / 1000.0)
+        free.release()
+
+    done = 0
+    with ThreadPoolExecutor(max_workers=concurrency) as ex:
+        for ms in latencies_ms:
+            free.acquire()
+            ex.submit(wait, ms)
+            done += 1
+    return done
+
+
 def run_simulated_latency(
     tasks: DataFrame,
     *,
@@ -109,8 +135,9 @@ def run_simulated_latency(
     ``concurrency`` (wall-clock floor ``n × latency / (partitions ×
     concurrency)`` either way):
 
-    - ``io_mode="threads"``: a thread pool drives blocking sleeps —
-      the reference benchmark's own model (THREAD_POOL runtime, 300
+    - ``io_mode="threads"``: one pool of threads per partition
+      (``_drive_io_threads``) drives blocking sleeps — the reference
+      benchmark's own model (THREAD_POOL runtime, 300
       threads/partition), kept as the apples-to-apples headline.
     - ``io_mode="async"``: one slot pool per partition
       (``_drive_io_slots``) — the reference's *async processor*
@@ -124,26 +151,13 @@ def run_simulated_latency(
       20 ms at concurrency 300 take ~1.05× their 400 ms floor, against
       ~1.18× for a pool of 300 threads.
     """
-    from concurrent.futures import ThreadPoolExecutor
+    drive = {"threads": _drive_io_threads, "async": _drive_io_slots}[io_mode]
 
     def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with ThreadPoolExecutor(max_workers=concurrency) as ex:
-            done = 0
-            for pdf in batches:
-                list(
-                    ex.map(
-                        lambda ms: time.sleep(ms / 1000.0),
-                        pdf["process_latency_ms"].tolist(),
-                    )
-                )
-                done += len(pdf)
-        yield pd.DataFrame({"n": [done]})
-
-    def proc_async(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # one pool per partition, fed lazily across all its Arrow batches
         lats = (ms for pdf in batches for ms in pdf["process_latency_ms"].tolist())
-        yield pd.DataFrame({"n": [_drive_io_slots(lats, concurrency)]})
+        yield pd.DataFrame({"n": [drive(lats, concurrency)]})
 
-    fn = {"threads": proc, "async": proc_async}[io_mode]
     # the JVM counts the input rows in the same job that processes them
     offered = Observation()
     counted = tasks.observe(offered, F.count(F.lit(1)).alias("n"))
@@ -154,7 +168,7 @@ def run_simulated_latency(
     t0 = time.perf_counter()
     # one row per partition, summed here: an aggregate would add an
     # exchange, which adaptive execution runs as a job of its own
-    processed = sum(r["n"] for r in counted.mapInPandas(fn, "n long").collect())
+    processed = sum(r["n"] for r in counted.mapInPandas(proc, "n long").collect())
     wall = time.perf_counter() - t0
     n_tasks = offered.get["n"]
     assert processed == n_tasks, (processed, n_tasks)

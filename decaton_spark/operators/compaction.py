@@ -46,8 +46,10 @@ def compact_tasks(
 
     The survivor struct holds only the columns outside ``key_cols``;
     the key columns are read from the group, so a streaming caller's
-    state does not store them twice. Output columns keep ``df.columns``
-    order, plus ``linger_window`` when ``keep_window=True``.
+    state does not store them twice. Output columns are ``key_cols``,
+    then the other columns in ``df.columns`` order (so ``df.columns``
+    order itself when the keys lead it), plus ``linger_window`` when
+    ``keep_window=True``.
 
     This is the only survivor election in the package:
     ``streaming_compact`` and ``event_time_compact`` run it on a stream.
@@ -61,11 +63,5 @@ def compact_tasks(
     if linger is not None:
         group.append(F.window(F.col(ts_col), linger).alias("linger_window"))
 
-    agg = df.groupBy(*group).agg(survivor)
-    cols = [
-        F.col(c) if c in keys else F.col(f"survivor.{c}").alias(c)
-        for c in df.columns
-    ]
-    if keep_window and linger is not None:
-        cols.append(F.col("linger_window"))
-    return agg.select(*cols)
+    window = ["linger_window"] if keep_window and linger is not None else []
+    return df.groupBy(*group).agg(survivor).select(*keys, "survivor.*", *window)

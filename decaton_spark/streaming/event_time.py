@@ -5,10 +5,10 @@ windows are wall-clock timers and there is no late-data story
 (SURVEY §2.6 — ``CompactionProcessor.java:179-181``). Spark's
 event-time watermarking is the native upgrade: windows are keyed by
 the *task* timestamp, late rows beyond the watermark are dropped
-deterministically, and append-mode emits each (key, window) exactly
-once when the watermark passes the window end. ``event_time_compact``
-is the batch ``compact_tasks`` called on the watermarked stream, so its
-output equals the batch output over the non-late rows.
+deterministically, and the watermark evicts a window's state once it
+passes the window end. ``event_time_compact`` is the batch
+``compact_tasks`` called on the watermarked stream, so its last
+emission per window equals the batch output over the non-late rows.
 
 Scale: the batch aggregation's plan (partial agg → shuffle on
 (key, window) → final agg) plus per-window state in the checkpointed
@@ -36,8 +36,9 @@ def event_time_compact(
     stream — last-wins survivor per (key, tumbling linger window), late
     rows beyond the watermark dropped.
 
-    Output: key, window_start_ms, offset, meta_timestamp_millis, value
-    — one row per closed (key, window) in append mode.
+    Output: key, window_start_ms, offset, meta_timestamp_millis, value.
+    Under ``Subscription`` the plan's aggregate runs in update mode:
+    each microbatch emits the (key, window) survivors it changed.
 
     The state holds ``ts_col`` in the survivor as well, so checkpoints
     written by the earlier form of this operator (whose survivor held
@@ -70,7 +71,8 @@ def session_windows(
     (``README.md:27-29``) and Structured Streaming provides natively:
     a session extends while records arrive within ``gap`` of the last
     one; the watermark closes sessions so state is bounded and append
-    output is exact-once per closed session.
+    output (the only mode Spark runs a session window in) is
+    exact-once per closed session.
 
     Works identically on batch DataFrames (deterministic form for
     tests/oracles) and streams. Returns (key, session_start_ms,

@@ -43,6 +43,14 @@ replay, so a replayed batch flushes and releases exactly what its first
 run did; timers are ``GroupStateTimeout.ProcessingTimeTimeout``, fired
 by no-data microbatches.
 
+Every operator here runs under ``Subscription``, which reads the output
+mode from the plan: ``update`` for the native aggregations, and for a
+fold the ``mode`` it hands ``_fold_by_key`` (``update`` for
+``streaming_kmv`` and ``streaming_cusum``, ``append`` for the rest). A
+timer fold needs a trigger that runs no-data microbatches
+(``processingTime``); under ``availableNow`` its query would never end,
+so ``Subscription`` refuses it.
+
 The per-key hash shuffle of groupByKey IS the sub-partitioner (P1);
 rows within a (key, batch) are processed in (partition, offset) order,
 preserving Decaton's PROCESS_ORDERING invariant; keys are independent,
@@ -132,8 +140,9 @@ def _fold_by_key(
       rows, once that much processing time has passed; None sets no
       timer.
 
-    The closure ships to Python workers, so it must capture no
-    DataFrame (they do not pickle)."""
+    ``mode`` is the output mode the fold's plan carries, which
+    ``Subscription`` runs the query in. The closure ships to Python
+    workers, so it must capture no DataFrame (they do not pickle)."""
 
     def update(key, pdfs, state):
         rows = pd.concat(list(pdfs), ignore_index=True)
@@ -176,7 +185,7 @@ def streaming_compact(
     each time it changes — only the windows CHANGED by a microbatch are
     emitted, so the last emission per window equals ``compact_tasks``.
     Output schema: key, window_start_ms, offset, meta_timestamp_millis,
-    value; run it in ``update`` output mode.
+    value.
 
     It calls ``compact_tasks`` grouped by (key, window_start_ms): a
     native streaming aggregation (no Python worker) whose state store
@@ -356,8 +365,8 @@ def streaming_batch(
     the buffer lives in the checkpointed state store, so a restart
     re-flushes instead of losing the pending batch (at-least-once).
 
-    Requires no-data microbatches (Spark default) so linger flushes
-    fire without new input. The linger clock is the microbatch
+    Requires no-data microbatches (a ``processingTime`` trigger) so
+    linger flushes fire without new input. The linger clock is the microbatch
     timestamp, so a batch replayed after a restart flushes exactly what
     its first run flushed; a buffer whose linger passed while the query
     was down flushes in the first batch after the replay.
@@ -427,8 +436,8 @@ def streaming_scheduled(
     always (the at-least-after contract; T3's retry consumer is this
     operator pointed at the retry topic).
 
-    Requires no-data microbatches (Spark default) so timeouts fire
-    without new input. "Now" is the microbatch timestamp
+    Requires no-data microbatches (a ``processingTime`` trigger) so
+    timeouts fire without new input. "Now" is the microbatch timestamp
     (``emitted_at_millis``), so a batch replayed after a restart
     releases exactly what its first run released; tasks that fell due
     while the query was down release in the first batch after the
@@ -749,7 +758,7 @@ def streaming_histogram_quantiles(
     bucket expression, and every microbatch emits the groups it touched
     through the batch sketch's readout — so the LAST emitted row per
     group equals the batch sketch over the same rows with the same
-    bounds, for ANY microbatch split. Run it in ``update`` output mode.
+    bounds, for ANY microbatch split.
 
     Checkpoints of the earlier ``applyInPandasWithState`` form cannot be
     resumed: the state schema differs.
@@ -882,8 +891,7 @@ def streaming_ab_monitor(
     per-trigger readout, not a batch query rerun over history.
 
     Emits (group, n_a, n_b, sum_centi_a, sum_centi_b, t_stat,
-    welch_dof) per group per microbatch that touches it; run it in
-    ``update`` output mode.
+    welch_dof) per group per microbatch that touches it.
     """
     return welch_ttest(
         events,
@@ -922,9 +930,8 @@ def streaming_psi_monitor(
     recompute over history.
 
     Emits (group, n_obs, n_buckets, psi_upm) per touched group per
-    microbatch; run it in ``update`` output mode. Checkpoints of the
-    earlier ``applyInPandasWithState`` form cannot be resumed: the state
-    schema differs.
+    microbatch. Checkpoints of the earlier ``applyInPandasWithState``
+    form cannot be resumed: the state schema differs.
     """
     b = F.col(bucket_col)
     outside = F.raise_error(

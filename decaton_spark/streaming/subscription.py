@@ -9,8 +9,10 @@ commit offsets. Spark replaces the whole offset/rebalance machinery
     readStream → pipeline (the same batch operators) → foreachBatch
     process_fn → checkpoint commit.
 
-Per microbatch, :class:`Subscription` re-reads its reloadable config,
-holds the trigger while the rate is 0 (paused), drops ignored keys,
+The query's output mode comes from the stream's plan
+(:func:`output_mode`), so every streaming builder runs under the same
+loop. Per microbatch, :class:`Subscription` re-reads its reloadable
+config, holds the trigger while the rate is 0 (paused), drops ignored keys,
 applies the pipeline, hands the frame to ``process_fn``, counts the
 rows in that job, and paces the next batch with a token bucket. Which
 topics the stream reads (origin + retry + shaping) and where failed
@@ -89,6 +91,12 @@ class Subscription:
         self.config = config or SubscriptionConfig()
         self.config_supplier = config_supplier
         self.meters = meters
+        if config_supplier is None and self.config.rate_limit_per_second == 0:
+            # nothing could ever unpause it: every batch would commit
+            # unprocessed, and a restart could not bring its records back
+            raise ValueError(
+                "rate_limit_per_second=0 (paused) needs a config_supplier that can unpause it"
+            )
         self._query: StreamingQuery | None = None
         self._bucket: TokenBucket | None = None
         self._bucket_rate: int | None = None
@@ -108,24 +116,18 @@ class Subscription:
         # rate 0 = Decaton PAUSED (ProcessorProperties rate semantics:
         # 0 "stops processing", RateLimiter.PAUSED): hold the trigger,
         # re-reading the dynamic config until unpaused — records stay
-        # unprocessed, the microbatch does not complete. With a static
-        # config (nothing can ever unpause) skip the processor instead
-        # of wedging the query; the skip is observable in progress.
+        # unprocessed, the microbatch does not complete
         pause_started = time.monotonic() if cfg.rate_limit_per_second == 0 else None
         if pause_started is not None and self.meters is not None:
             self.meters.partition_state.partition_paused.set(1)
-        while cfg.rate_limit_per_second == 0 and self.config_supplier is not None:
+        while cfg.rate_limit_per_second == 0:
             time.sleep(0.25)
             cfg = self.config_supplier()
         if pause_started is not None and self.meters is not None:
             paused_s = time.monotonic() - pause_started
             self.meters.partition_state.partition_paused_time.record(paused_s)
             self.meters.subscription.process_durations["pause"].record(paused_s)
-            self.meters.partition_state.partition_paused.set(
-                1 if cfg.rate_limit_per_second == 0 else 0
-            )
-        if cfg.rate_limit_per_second == 0:
-            return  # statically paused: processor never runs
+            self.meters.partition_state.partition_paused.set(0)
         self._rebuild_bucket(cfg.rate_limit_per_second)
         df = batch_df
         if cfg.ignore_keys:
@@ -158,21 +160,27 @@ class Subscription:
                     self.meters.scheduler.partition_throttled_time.record(slept)
 
     def start(self, query_name: str = "decaton-subscription") -> StreamingQuery:
+        mode, timers = output_mode(self.stream)
+        if timers and self.config.trigger.get("availableNow"):
+            raise ValueError(
+                "a processing-time timer fold never drains under availableNow "
+                "(each pending timer runs another batch); use a processingTime trigger"
+            )
         writer = (
             self.stream.writeStream.queryName(query_name)
             .foreachBatch(self._foreach_batch)
-            .outputMode("update")
+            .outputMode(mode)
         )
         if self.config.checkpoint_location:
             writer = writer.option("checkpointLocation", self.config.checkpoint_location)
-        trig = self.config.trigger
-        writer = writer.trigger(**trig)
-        self._query = writer.start()
+        self._query = writer.trigger(**self.config.trigger).start()
         return self._query
 
-    def await_termination(self, timeout: float | None = None) -> None:
+    def await_termination(self, timeout: float | None = None) -> bool | None:
+        """``StreamingQuery.awaitTermination``: raises the query's failure;
+        with a ``timeout``, returns whether the query has ended."""
         assert self._query is not None, "not started"
-        self._query.awaitTermination(timeout)
+        return self._query.awaitTermination(timeout)
 
     def stop(self) -> None:
         """Graceful drain analog (ProcessorSubscription.initiateShutdown):
@@ -183,6 +191,54 @@ class Subscription:
     @property
     def last_progress(self):
         return self._query.lastProgress if self._query else None
+
+
+def output_mode(stream: DataFrame) -> tuple[str, bool]:
+    """The output mode ``stream``'s analyzed plan runs in, and whether
+    it holds a processing-time timer fold.
+
+    Each stateful operator fixes the modes it supports (Structured
+    Streaming, SIGMOD 2018), so the plan decides, not the caller:
+
+    - a keyed fold (``FlatMapGroupsInPandasWithState``) runs in the mode
+      ``stateful._fold_by_key`` wrote into it, and a session-window
+      aggregate in ``append``, the only mode Spark runs it in; operators
+      whose modes disagree are refused, naming both modes;
+    - otherwise a streaming ``Aggregate`` runs in ``update``, which
+      emits the groups each microbatch changed;
+    - anything else (stateless, dedup, stream-stream join) runs in
+      ``append``.
+    """
+    fixed: set[str] = set()
+    timers = aggregate = False
+    todo = [stream._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "FlatMapGroupsInPandasWithState":
+            fixed.add(node.outputMode().toString().lower())
+            timers |= node.timeout().toString() == "ProcessingTimeTimeout"
+        elif name == "Aggregate" and node.isStreaming():
+            aggregate = True
+            if any(  # grouped by a session_window column, marked by Spark
+                k.nodeName() == "AttributeReference"
+                and k.metadata().contains("spark.sessionWindow")
+                for k in _seq(node.groupingExpressions())
+            ):
+                fixed.add("append")
+        todo.extend(_seq(node.children()))
+    if len(fixed) > 1:
+        raise ValueError(
+            f"stateful operators disagree on the output mode: {' and '.join(sorted(fixed))}"
+        )
+    if fixed:
+        return fixed.pop(), timers
+    return ("update" if aggregate else "append"), timers
+
+
+def _seq(jseq) -> list:
+    """A Scala ``Seq`` as a Python list."""
+    return [jseq.apply(i) for i in range(jseq.size())]
 
 
 def _observed_count(spark: SparkSession, obs: Observation, df: DataFrame) -> int:

@@ -1,7 +1,9 @@
-"""The I/O mirror's deferred-completion slot pool, without Spark.
+"""The I/O mirror's per-partition I/O pools, without Spark.
 
-``_drive_io_slots`` is what ``run_simulated_latency(io_mode="async")``
-runs in each partition. Each call here runs in a thread joined with a
+``_drive_io_slots`` (the deferred-completion slot pool) and
+``_drive_io_threads`` (the thread pool) are what
+``run_simulated_latency(io_mode="async")`` and ``io_mode="threads"`` run
+in each partition. Each call here runs in a thread joined with a
 timeout, so a pool that never returns fails instead of hanging the suite.
 """
 
@@ -13,21 +15,22 @@ import time
 
 import pytest
 
-from decaton_spark.benchmark import _drive_io_slots
+from decaton_spark.benchmark import _drive_io_slots, _drive_io_threads
 
 # timers and this clock are both CLOCK_MONOTONIC; the margin only absorbs
 # float rounding, never a timer that fired early
 EPS_S = 1e-6
 
 
-def drive(latencies_ms, concurrency: int, timeout_s: float = 20.0) -> tuple[int, float]:
+def drive(latencies_ms, concurrency: int, timeout_s: float = 20.0,
+          pool=_drive_io_slots) -> tuple[int, float]:
     """(completed count, wall seconds) of one pool run."""
     box: dict = {}
 
     def run() -> None:
         t = time.monotonic()
         try:
-            box["n"] = _drive_io_slots(latencies_ms, concurrency)
+            box["n"] = pool(latencies_ms, concurrency)
         except Exception as e:
             box["error"] = e
         box["wall"] = time.monotonic() - t
@@ -76,12 +79,22 @@ def test_each_task_waits_its_own_latency():
     assert max(lats) / 1000.0 - EPS_S <= wall < sum(lats) / 1000.0, wall
 
 
+FRAMES = [[200] * 15 for _ in range(3)]
+
+
 def test_slots_stay_full_across_frames():
     """Three Arrow-batch-sized frames of 15 tasks at c=10, L=200 ms: one
     pool over the stream runs 45 tasks in 5 waves (1.0 s). Draining the
     slots at each frame boundary would take 2 waves per frame, 1.2 s."""
-    frames = [[200] * 15 for _ in range(3)]
-    n, wall = drive((ms for frame in frames for ms in frame), 10)
+    n, wall = drive((ms for frame in FRAMES for ms in frame), 10)
+    assert n == 45
+    assert 1.0 - EPS_S <= wall < 1.15, wall
+
+
+def test_threads_stay_busy_across_frames():
+    """The thread pool of ``io_mode="threads"`` on the same frames: one
+    pool over the stream, 5 waves (1.0 s), not 2 waves per frame."""
+    n, wall = drive((ms for frame in FRAMES for ms in frame), 10, pool=_drive_io_threads)
     assert n == 45
     assert 1.0 - EPS_S <= wall < 1.15, wall
 

@@ -9,7 +9,10 @@ from __future__ import annotations
 import itertools
 import time
 from contextlib import contextmanager
+from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
@@ -25,12 +28,27 @@ from decaton_spark.streaming import (
     streaming_compact,
     streaming_scheduled,
 )
+from decaton_spark.streaming.event_time import session_windows
+from decaton_spark.streaming.joins import interval_join
 from decaton_spark.streaming.stateful import (
+    ordered_process,
+    streaming_ab_monitor,
+    streaming_cusum,
     streaming_dedup,
+    streaming_heavy_hitters,
     streaming_histogram_quantiles,
+    streaming_kmv,
+    streaming_lsh_candidates,
     streaming_psi_monitor,
+    streaming_quota,
+    streaming_zscore_alerts,
 )
-from decaton_spark.streaming.subscription import SubscriptionConfig, idempotent_parquet_sink
+from decaton_spark.streaming.subscription import (
+    SubscriptionConfig,
+    idempotent_parquet_sink,
+    output_mode,
+)
+from tests.utils import rows_of, run_subscription
 
 HOUR_MS = 3_600_000
 
@@ -96,22 +114,17 @@ def test_subscription_reloadable_config(spark, task_stream_dir):
 
 
 def test_subscription_paused_static_skips_processor(spark, task_stream_dir):
-    """rate=0 is Decaton PAUSED (RateLimiter.PAUSED): with a static
-    config the processor must never run."""
+    """rate=0 is Decaton PAUSED (RateLimiter.PAUSED). A static config
+    could never unpause: its batches would commit unprocessed, and a
+    restart could not bring their records back. So it is refused before
+    any query starts."""
     path, schema = task_stream_dir
     stream = spark.readStream.schema(schema).parquet(path)
-    seen: list[int] = []
-    sub = Subscription(
-        spark, stream,
-        process_fn=lambda df, bid: seen.append(df.count()),
-        config=SubscriptionConfig(
-            rate_limit_per_second=0, trigger={"availableNow": True}
-        ),
-    )
-    sub.start("test-paused")
-    sub.await_termination(120)
-    sub.stop()
-    assert seen == [], "PAUSED subscription must not process any batch"
+    with pytest.raises(ValueError, match="config_supplier"):
+        Subscription(
+            spark, stream, process_fn=lambda df, bid: None,
+            config=SubscriptionConfig(rate_limit_per_second=0),
+        )
 
 
 def test_subscription_paused_then_unpaused_resumes(spark, task_stream_dir):
@@ -241,11 +254,12 @@ def test_subscription_rate_limit_paces_after_processing(spark, tmp_path):
     assert m.thread_util.tasks_queued.count == n
 
 
-def _final_survivors(spark, table: str):
+def _final_survivors(spark, out, batches):
     """Survivors are monotone under (ts, offset): the final survivor per
-    (key, window) is the max over all update-mode emissions."""
+    (key, window) is the max over all update-mode emissions of ``out``
+    in ``batches``."""
     return (
-        spark.table(table)
+        spark.createDataFrame(rows_of(batches), out.schema)
         .groupBy("key", "window_start_ms")
         .agg(
             F.max_by(
@@ -263,18 +277,8 @@ def test_streaming_compaction_matches_batch(spark, sf_dir, task_stream_dir, tmp_
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
     )
     out = streaming_compact(stream, window_ms=HOUR_MS)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("compact_stream")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
-
-    got = _final_survivors(spark, "compact_stream").toPandas()
+    _, batches = run_subscription(out, tmp_path / "ckpt")
+    got = _final_survivors(spark, out, batches).toPandas()
 
     tasks = events_to_tasks(load_table(spark, "events", sf_dir))
     expected = (
@@ -305,33 +309,14 @@ def test_streaming_compaction_survives_restart(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     half1.coalesce(1).write.mode("append").parquet(str(d))
 
-    emissions: list = []
-
-    def run_once(qname):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(d))
-        )
-        q = (
-            streaming_compact(stream, window_ms=HOUR_MS)
-            .writeStream.queryName(qname)
-            .foreachBatch(lambda df, bid: emissions.extend(df.collect()))
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        q.stop()
-
-    run_once("compact_r1")  # first instance: half the data, then "crash"
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(d))
+    out = streaming_compact(stream, window_ms=HOUR_MS)
+    _, batches = run_subscription(out, ckpt)  # first instance: half the data, then "crash"
     half2.coalesce(1).write.mode("append").parquet(str(d))
-    run_once("compact_r2")  # restarted instance resumes from checkpoint
-
-    # union of emissions from both incarnations; survivors are monotone
-    spark.createDataFrame(emissions).createOrReplaceTempView("compact_all")
-    got = _final_survivors(spark, "compact_all").toPandas()
+    # the restarted instance resumes from the checkpoint; survivors are
+    # monotone, so the union of both incarnations' emissions is read
+    batches += run_subscription(out, ckpt)[1]
+    got = _final_survivors(spark, out, batches).toPandas()
 
     expected = (
         compact_tasks(
@@ -383,30 +368,16 @@ T0 = 1_000_000  # away from epoch 0, which sits on the initial watermark
 
 def _run_compact(stream, ckpt, **kw):
     """Run ``streaming_compact`` to the end of its input; returns the
-    query (still queryable) and the rows each microbatch emitted."""
-    emitted: list = []
-    q = (
-        streaming_compact(stream, **kw)
-        .writeStream.foreachBatch(
-            lambda df, bid: emitted.append(sorted(tuple(r) for r in df.collect()))
-        )
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return q, emitted
+    (ended) query and the rows each microbatch emitted."""
+    q, batches = run_subscription(streaming_compact(stream, **kw), ckpt)
+    return q, [sorted(tuple(r) for r in rows) for _, rows in batches]
 
 
 def _assert_native_state_plan(q):
-    """``q`` (ended, not stopped) ran one native state-store
-    aggregation and no Python node; stops ``q``."""
-    try:
-        plan = q._jsq.explainInternal(True)
-        ops = [op.operatorName for op in q.lastProgress.stateOperators]
-    finally:
-        q.stop()
+    """The ended query ``q`` ran one native state-store aggregation
+    and no Python node."""
+    plan = q._jsq.explainInternal(True)
+    ops = [op.operatorName for op in q.lastProgress.stateOperators]
     assert "StateStoreSave" in plan
     assert ops == ["stateStoreSave"]
     for node in ("Python", "InPandas", "ArrowEval"):
@@ -431,16 +402,7 @@ MONITORS = {
 
 
 def _run_monitor(monitor, stream, ckpt):
-    q = (
-        MONITORS[monitor](stream)
-        .writeStream.foreachBatch(lambda df, bid: df.collect())
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return q
+    return run_subscription(MONITORS[monitor](stream), ckpt)[0]
 
 
 @pytest.mark.parametrize("monitor", sorted(MONITORS))
@@ -459,7 +421,7 @@ def test_streaming_psi_monitor_rejects_out_of_range_bucket(spark, tmp_path, bad)
     rows = [("a", 1.0, 3), ("a", 2.0, bad)]
     stream = _file_stream(spark, tmp_path / "src", [rows], MONITOR_SCHEMA)
     with pytest.raises(StreamingQueryException, match=rf"bucket {bad} outside \[0, 20\)"):
-        _run_monitor("psi", stream, str(tmp_path / "ck")).stop()
+        _run_monitor("psi", stream, str(tmp_path / "ck"))
 
 
 STATE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
@@ -470,20 +432,38 @@ STATE_STORES = {
         ("rocksdb", "RocksDBStateStoreProvider"),
     ]
 }
-# each stateful operator, over TASK_SCHEMA rows, with the sink rows a
-# run of CRASH_BATCHES leaves
+HOLD_MS = 8_000  # linger / due horizon: longer than a first run's two batches
+# each stateful operator, over TASK_SCHEMA rows and the run's due time,
+# with the sink rows a run of CRASH_BATCHES leaves
 CRASH_OPERATORS = {
-    "streaming_compact": (lambda s: streaming_compact(s, window_ms=1_000), 5),
-    "streaming_dedup": (lambda s: streaming_dedup(s, within="1 hour"), 4),
+    "streaming_compact": (lambda s, due: streaming_compact(s, window_ms=1_000), 5),
+    "streaming_dedup": (lambda s, due: streaming_dedup(s, within="1 hour"), 4),
     "event_time_compact": (
-        lambda s: event_time_compact(
+        lambda s, due: event_time_compact(
             s.withColumn("timestamp", F.timestamp_millis("meta_timestamp_millis")),
             linger="1 second",
             watermark="0 seconds",
         ),
         5,
     ),
+    # the timer folds buffer or hold every row for HOLD_MS, so only a
+    # timer that fires after the restart delivers them
+    "streaming_batch": (
+        lambda s, due: streaming_batch(
+            s.withColumn("partition", F.lit(0)), capacity=8, linger_ms=HOLD_MS
+        ),
+        1,
+    ),
+    "streaming_scheduled": (
+        lambda s, due: streaming_scheduled(
+            s.withColumn("meta_scheduled_time_millis", F.lit(due))
+        )
+        .where(F.col("emitted_at_millis") >= F.col("scheduled_time_millis"))
+        .select("key", "offset"),
+        5,
+    ),
 }
+TIMER_FOLDS = ("streaming_batch", "streaming_scheduled")
 CRASH_BATCHES = [
     [("k1", T0 + 100, 1, "a"), ("k2", T0 + 200, 2, "b")],
     # k4 redelivers k1's payload: streaming_dedup drops it from state
@@ -505,6 +485,11 @@ def _crashing_sink(sink, crash):
             raise RuntimeError(crash)
 
     return write
+
+
+def _committed_rows(sink: str) -> int:
+    """Rows in the batches ``idempotent_parquet_sink`` has committed."""
+    return sum(pq.read_table(m.parent).num_rows for m in Path(sink).glob("batch_id=*/_SUCCESS"))
 
 
 @contextmanager
@@ -537,38 +522,51 @@ def _crash_restart_case(spark, crash_stream, tmp_path, operator, crash, store):
     in batch 1 at ``crash`` and restarts; its sink equals a run with no
     crash. On ``after_write`` the replayed batch, which the sink skips,
     still runs its plan once, so its state store commits; on
-    ``before_write`` it is rebuilt from batch 0's state and written."""
+    ``before_write`` it is rebuilt from batch 0's state and written.
+
+    A timer fold runs on a processing-time trigger until its sink holds
+    every row, and restarts once its linger or due time has passed. The
+    replayed batch 1 decides on its own timestamp, restored from the
+    offset log, so it flushes or releases nothing, as its first run did;
+    the next batch delivers the rows. On the wall clock the replay
+    released them into batch 1, which the sink skips as written, and
+    they were lost."""
     stream, clean = crash_stream
     build, n_rows = CRASH_OPERATORS[operator]
+    timer = operator in TIMER_FOLDS
+    due = int(time.time() * 1000) + HOLD_MS  # the crashed run's and its restart's
 
-    def run(root, name, crash=None):
-        sink = idempotent_parquet_sink(str(root / "sink"))
-        sub = Subscription(
-            spark,
-            build(stream),
-            process_fn=_crashing_sink(sink, crash) if crash else sink,
-            config=SubscriptionConfig(
-                checkpoint_location=str(root / "ckpt"),
-                trigger={"availableNow": True},
-            ),
-        )
+    def run(root, crash=None, due=due):
+        sink = str(root / "sink")
+        write = idempotent_parquet_sink(sink)
+        trigger = until = None
+        if timer:
+            trigger = {"processingTime": "500 milliseconds"}
+            until = lambda _: _committed_rows(sink) >= n_rows  # noqa: E731
         with _spark_conf(spark, {STATE_PROVIDER: STATE_STORES[store]}):
-            sub.start(name)
-            try:
-                sub.await_termination(120)
-            finally:
-                sub.stop()
-        return sorted(tuple(r) for r in spark.read.parquet(str(root / "sink")).collect())
+            run_subscription(
+                build(stream, due), root / "ckpt",
+                process=_crashing_sink(write, crash) if crash else write,
+                trigger=trigger, until=until,
+            )
+        rows = spark.read.parquet(sink)
+        if timer:  # the batch a timer fires in depends on the wall clock
+            rows = rows.drop("batch_id")
+        return sorted(tuple(r) for r in rows.collect())
 
     if (operator, store) not in clean:
-        clean[(operator, store)] = run(tmp_path / "clean", f"clean-{operator}-{store}")
+        clean[(operator, store)] = run(
+            tmp_path / "clean", due=int(time.time() * 1000) + HOLD_MS
+        )
     crashed = tmp_path / "crash"
     with pytest.raises(StreamingQueryException, match=crash):
-        run(crashed, f"crash-{operator}-{store}", crash)
+        run(crashed, crash)
     ckpt = crashed / "ckpt"
     assert STATE_STORES[store] in (ckpt / "offsets" / "0").read_text()
     assert max(int(p.name) for p in (ckpt / "commits").iterdir() if p.name.isdigit()) == 0
-    got = run(crashed, f"restart-{operator}-{store}")  # replays batch 1
+    if timer:
+        time.sleep(HOLD_MS / 1000 + 1)  # the linger / due time passes while down
+    got = run(crashed)  # replays batch 1
     assert got == clean[(operator, store)]
     assert len(got) == n_rows
 
@@ -596,6 +594,194 @@ def test_subscription_crash_point_matrix(spark, crash_stream, tmp_path, operator
     _crash_restart_case(spark, crash_stream, tmp_path, operator, crash, store)
 
 
+def _p0(s):
+    return s.withColumn("partition", F.lit(0))
+
+
+def _ts(name):
+    return F.timestamp_millis("meta_timestamp_millis").alias(name)
+
+
+# every builder of streaming/stateful.py and streaming/event_time.py, and
+# interval_join, over the TASK_SCHEMA rows of BUILDER_ROWS; with the
+# columns checked and their rows. The timer folds run on a
+# processing-time trigger, the rest under availableNow.
+BUILDERS = {
+    "streaming_compact": (
+        lambda s: streaming_compact(s, window_ms=1_000),
+        ("key", "window_start_ms", "offset", "value"),
+        [("a", T0, 2, "y"), ("b", T0, 3, "x")],
+    ),
+    "ordered_process": (
+        lambda s: ordered_process(_p0(s)),
+        ("key", "offset", "prev_offset", "regressed"),
+        [("a", 1, -1, False), ("a", 2, 1, False), ("b", 3, -1, False)],
+    ),
+    "streaming_quota": (
+        lambda s: streaming_quota(_p0(s), 2),
+        ("key", "offset", "estimate", "quota_verdict"),
+        [("a", 1, 1, "process"), ("a", 2, 2, "shape"), ("b", 3, 1, "process")],
+    ),
+    "streaming_batch": (
+        lambda s: streaming_batch(_p0(s), capacity=2, linger_ms=500),
+        ("batch_seq", "batch_size", "first_offset", "last_offset", "reason"),
+        [(0, 2, 1, 2, "size"), (1, 1, 3, 3, "linger")],
+    ),
+    "streaming_scheduled": (
+        lambda s: streaming_scheduled(
+            s.withColumn("meta_scheduled_time_millis", F.col("meta_timestamp_millis"))
+        ),
+        ("key", "offset"),
+        [("a", 1), ("a", 2), ("b", 3)],
+    ),
+    "streaming_dedup": (
+        lambda s: streaming_dedup(s, within="1 hour"),
+        ("value",),
+        [("x",), ("y",)],
+    ),
+    "streaming_heavy_hitters": (
+        lambda s: streaming_heavy_hitters(_p0(s), 2),
+        ("key", "offset", "estimate"),
+        [("a", 2, 2)],
+    ),
+    "streaming_zscore_alerts": (
+        lambda s: streaming_zscore_alerts(
+            s.select(
+                F.lit(7).cast("long").alias("user_id"), _ts("ts"),
+                F.col("offset").alias("event_id"), F.col("offset").cast("double").alias("value"),
+            ),
+            threshold=1.0,
+            n=2,
+        ),
+        ("event_id", "user_id", "zscore"),
+        [(2, 7, 1.0), (3, 7, 1.0)],
+    ),
+    "streaming_lsh_candidates": (
+        lambda s: streaming_lsh_candidates(
+            s.select(F.col("offset").alias("doc_id"), F.concat_ws(" ", *[F.col("value")] * 5).alias("text"))
+        ),
+        ("id_a", "id_b"),
+        [(1, 3)] * 4,  # once per band
+    ),
+    "streaming_kmv": (
+        lambda s: streaming_kmv(s, "value", "key", k=8),
+        ("key", "n_in_sketch", "kmv_distinct_est"),
+        [("a", 2, 2), ("b", 1, 1)],
+    ),
+    "streaming_histogram_quantiles": (
+        lambda s: streaming_histogram_quantiles(
+            s.withColumn("v", F.col("offset").cast("double")), "v", "key",
+            bounds={"a": (0, 1_000), "b": (0, 1_000)},
+        ),
+        ("key", "n"),
+        [("a", 2), ("b", 1)],
+    ),
+    "streaming_cusum": (
+        lambda s: streaming_cusum(
+            s.withColumn("bucket_ms", F.col("offset") * HOUR_MS), "bucket_ms", "offset", "key",
+            baselines={"a": 0, "b": 0}, h=1,
+        ),
+        ("key", "last_bucket_ms", "s", "n_alarm_buckets", "first_alarm_bucket_ms"),
+        [("a", 2 * HOUR_MS, 1, 1, 2 * HOUR_MS), ("b", 3 * HOUR_MS, 2, 1, 3 * HOUR_MS)],
+    ),
+    "streaming_ab_monitor": (
+        lambda s: streaming_ab_monitor(
+            s.select(
+                F.col("value").alias("event_type"),
+                F.when(F.col("key") == "a", "A").otherwise("B").alias("arm"),
+                F.col("offset").alias("v"),
+            )
+        ),
+        ("event_type", "n_a", "n_b", "sum_centi_a", "sum_centi_b"),
+        [("x", 1, 1, 1, 3), ("y", 1, 0, 2, 0)],
+    ),
+    "streaming_psi_monitor": (
+        lambda s: streaming_psi_monitor(
+            s.select(F.col("value").alias("event_type"), F.col("offset").alias("bucket")),
+            baselines={"x": [1] * 20},
+        ),
+        ("event_type", "n_obs"),
+        [("x", 2)],
+    ),
+    "event_time_compact": (
+        lambda s: event_time_compact(
+            s.withColumn("timestamp", _ts("timestamp")), linger="1 second", watermark="0 seconds"
+        ),
+        ("key", "window_start_ms", "offset", "value"),
+        [("a", T0, 2, "y"), ("b", T0, 3, "x")],
+    ),
+    "session_windows": (  # b's row moves an hour on: its watermark closes a's session
+        lambda s: session_windows(
+            s.withColumn(
+                "meta_timestamp_millis",
+                F.col("meta_timestamp_millis") + F.when(F.col("key") == "b", HOUR_MS).otherwise(0),
+            ),
+            gap="30 seconds",
+        ),
+        ("key", "session_start_ms", "n_events"),
+        [("a", T0 + 100, 2)],
+    ),
+    "interval_join": (
+        lambda s: interval_join(
+            s.select("key", _ts("l_ts")),
+            s.select("key", F.col("offset").alias("r_offset"), _ts("r_ts")),
+            left_key="key", right_key="key", left_ts="l_ts", right_ts="r_ts",
+            within="1 second",
+        ),
+        ("key", "r_offset"),
+        [("a", 1), ("a", 2), ("a", 2), ("b", 3)],
+    ),
+}
+BUILDER_ROWS = [("a", T0 + 100, 1, "x"), ("a", T0 + 200, 2, "y"), ("b", T0 + 300, 3, "x")]
+
+
+@pytest.fixture(scope="module")
+def builder_stream(spark, tmp_path_factory):
+    return _file_stream(spark, tmp_path_factory.mktemp("builders") / "src", [BUILDER_ROWS], TASK_SCHEMA)
+
+
+@pytest.mark.parametrize("builder", sorted(BUILDERS))
+def test_every_streaming_builder_runs_under_subscription(spark, builder_stream, tmp_path, builder):
+    """Each builder runs under ``Subscription`` as it is built, in the
+    output mode its plan takes, and emits the rows its contract gives."""
+    build, cols, want = BUILDERS[builder]
+    trigger = until = None
+    if builder in TIMER_FOLDS:
+        trigger = {"processingTime": "500 milliseconds"}
+        until = lambda b: len(rows_of(b)) >= len(want)  # noqa: E731
+    _, batches = run_subscription(
+        build(builder_stream), tmp_path / "ckpt", trigger=trigger, until=until, timeout_s=120
+    )
+    assert sorted(tuple(r[c] for c in cols) for r in rows_of(batches)) == want
+
+
+def test_subscription_refuses_timer_fold_under_available_now(spark, tmp_path):
+    """A processing-time timer fold never ends under ``availableNow``:
+    each pending timer runs another no-data batch. ``start`` refuses it
+    before any query starts."""
+    stream = spark.readStream.schema(TASK_SCHEMA).parquet(str(tmp_path))
+    for fold in (streaming_batch(_p0(stream)), streaming_scheduled(stream.withColumn(
+        "meta_scheduled_time_millis", F.col("meta_timestamp_millis")
+    ))):
+        assert output_mode(fold) == ("append", True)
+        with pytest.raises(ValueError, match="availableNow"):
+            Subscription(spark, fold).start()
+    assert spark.streams.active == []
+
+
+def test_output_mode_refuses_folds_that_disagree(spark, tmp_path):
+    """An append-mode fold over an update-mode one has no output mode
+    both accept; the error names both."""
+    stream = spark.readStream.schema(TASK_SCHEMA).parquet(str(tmp_path))
+    kmv = streaming_kmv(stream, "value", "key")
+    assert output_mode(kmv) == ("update", False)
+    nested = ordered_process(
+        kmv.select("key", F.lit(0).alias("partition"), F.col("n_in_sketch").alias("offset"))
+    )
+    with pytest.raises(ValueError, match="append and update"):
+        output_mode(nested)
+
+
 def test_streaming_compact_null_payloads_and_timestamps(spark, tmp_path):
     """A null survivor value is emitted as null (as ``compact_tasks``
     gives), not as the string 'None' and not back-filled from an older
@@ -607,8 +793,7 @@ def test_streaming_compact_null_payloads_and_timestamps(spark, tmp_path):
         ("nots", None, 4, "x"),
     ]
     stream = _file_stream(spark, tmp_path / "src", [rows], TASK_SCHEMA)
-    q, emitted = _run_compact(stream, str(tmp_path / "ck"), window_ms=1_000)
-    q.stop()
+    _, emitted = _run_compact(stream, str(tmp_path / "ck"), window_ms=1_000)
     assert emitted == [
         [("lone", T0, 1, T0 + 100, None), ("pair", T0, 3, T0 + 200, None)]
     ]
@@ -631,8 +816,7 @@ def test_streaming_compact_emits_only_changed_windows(spark, tmp_path):
         [("k", T0 + 550, 14, "f")],
     ]
     stream = _file_stream(spark, tmp_path / "src", batches, TASK_SCHEMA)
-    q, emitted = _run_compact(stream, str(tmp_path / "ck"), window_ms=1_000)
-    q.stop()
+    _, emitted = _run_compact(stream, str(tmp_path / "ck"), window_ms=1_000)
     assert emitted == [
         [("k", T0, 10, T0 + 500, "a")],
         [],
@@ -655,18 +839,9 @@ def test_streaming_compact_runs_on_rocksdb(spark, tmp_path):
     }
     with _spark_conf(spark, confs):  # the provider conf is read at query start
         stream = spark.readStream.schema(rows.schema).parquet(f"{src}/*")
-        q = (
-            streaming_compact(stream, window_ms=HOUR_MS)
-            .writeStream.format("memory")
-            .queryName("compact_rocks")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        q.stop()
-    got = _final_survivors(spark, "compact_rocks").toPandas()
+        out = streaming_compact(stream, window_ms=HOUR_MS)
+        _, batches = run_subscription(out, tmp_path / "ck")
+    got = _final_survivors(spark, out, batches).toPandas()
     survivors = {
         (r["key"], r["window_start_ms"]): r["offset"] for _, r in got.iterrows()
     }
@@ -692,12 +867,7 @@ def test_streaming_compact_state_ttl_evicts_behind_horizon(spark, tmp_path):
     q, emitted = _run_compact(
         stream, str(tmp_path / "ck"), window_ms=1_000, state_ttl_ms=2_000
     )
-    try:
-        ops = [
-            p.stateOperators[0] for p in q.recentProgress if p.numInputRows > 0
-        ]
-    finally:
-        q.stop()
+    ops = [p.stateOperators[0] for p in q.recentProgress if p.numInputRows > 0]
     assert [e for e in emitted if e] == [
         [("k", T0, 1, T0 + 100, "a"), ("k", T0 + 1_000, 2, T0 + 1_100, "b"),
          ("q", T0, 3, T0 + 500, "q")],
@@ -711,7 +881,8 @@ def test_streaming_compact_state_ttl_evicts_behind_horizon(spark, tmp_path):
 def test_event_time_compact_drops_late_rows(spark, tmp_path):
     """Watermark semantics (SURVEY §2.6 event-time upgrade): a row
     arriving after the watermark passed its window is dropped; the
-    closed window's survivor is unaffected by it.
+    closed window's survivor is unaffected by it and is not emitted
+    again.
 
     Note: the aggregation operator's late filter uses the watermark
     committed one batch earlier, so the late row must arrive ≥2
@@ -719,10 +890,6 @@ def test_event_time_compact_drops_late_rows(spark, tmp_path):
     here — this is the cross-batch contract pipelines must design for).
     """
     import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     d = tmp_path / "stream"
     d.mkdir()
@@ -766,25 +933,16 @@ def test_event_time_compact_drops_late_rows(spark, tmp_path):
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(d))
     )
     out = event_time_compact(stream, linger="1 hour", watermark="30 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("etc_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    q, batches = run_subscription(out, tmp_path / "ckpt")
     dropped = sum(
         op.get("numRowsDroppedByWatermark", 0)
         for p in q.recentProgress
         for op in p["stateOperators"]
     )
-    q.stop()
 
-    rows = spark.sql("SELECT * FROM etc_out").collect()
-    by_kw = {(r["key"], r["window_start_ms"]): r for r in rows}
-    assert len(rows) == len(by_kw), "append mode must emit each window once"
+    rows = rows_of(batches)
+    by_kw = {(r["key"], r["window_start_ms"]): r for r in rows}  # the last emission
+    assert [r["offset"] for r in rows if r["key"] == "k1"] == [1], "W0 emitted once"
     w0 = by_kw[("k1", base)]
     assert w0["value"] == "first", "late row must not replace the closed survivor"
     assert w0["offset"] == 1
@@ -797,13 +955,6 @@ def test_streaming_batch_size_and_linger_flush(spark, tmp_path):
     with >= capacity tasks flushes full 'size' batches immediately; the
     remainder (and any under-capacity partition) flushes via the linger
     timer. Every input row lands in exactly one flushed batch."""
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from decaton_spark.streaming import streaming_batch
-
     d = tmp_path / "stream"
     d.mkdir()
     # partition 0: 23 tasks (capacity 10 => two size flushes + linger 3)
@@ -821,28 +972,16 @@ def test_streaming_batch_size_and_linger_flush(spark, tmp_path):
     schema = "partition int, offset long"
     stream = spark.readStream.schema(schema).parquet(str(d))
     out = streaming_batch(stream, capacity=10, linger_ms=2_000)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("batch_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 45
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql(
-                "SELECT * FROM batch_out ORDER BY partition, batch_seq"
-            ).collect()
-            if sum(r["batch_size"] for r in rows) == 27:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
 
-    assert sum(r["batch_size"] for r in rows) == 27, f"all rows flushed: {rows}"
+    def flushed(batches):
+        return sum(r["batch_size"] for r in rows_of(batches))
+
+    _, batches = run_subscription(
+        out, tmp_path / "ckpt", trigger={"processingTime": "500 milliseconds"},
+        until=lambda b: flushed(b) >= 27, timeout_s=45,
+    )
+    rows = sorted(rows_of(batches), key=lambda r: (r["partition"], r["batch_seq"]))
+    assert flushed(batches) == 27, f"all rows flushed: {rows}"
     p0 = [r for r in rows if r["partition"] == 0]
     p1 = [r for r in rows if r["partition"] == 1]
     assert [r["reason"] for r in p0] == ["size", "size", "linger"]
@@ -859,14 +998,6 @@ def test_streaming_scheduled_holds_until_due(spark, tmp_path):
     """T4 streaming form: tasks with a future scheduled_time are held in
     state and released by a processing-time timer at/after their due
     time; due tasks of the same key are never blocked behind them."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from decaton_spark.streaming import streaming_scheduled
-
     d = tmp_path / "stream"
     d.mkdir()
     now_ms = int(time.time() * 1000)
@@ -888,29 +1019,12 @@ def test_streaming_scheduled_holds_until_due(spark, tmp_path):
 
     schema = "key string, offset long, meta_scheduled_time_millis long"
     stream = spark.readStream.schema(schema).parquet(str(d))
-    out = streaming_scheduled(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sched_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
+    _, batches = run_subscription(
+        streaming_scheduled(stream), tmp_path / "ckpt",
+        trigger={"processingTime": "500 milliseconds"},
+        until=lambda b: len(rows_of(b)) >= 3, timeout_s=45,
     )
-    try:
-        deadline = time.time() + 45
-        got = {}
-        while time.time() < deadline:
-            got = {
-                r["offset"]: r
-                for r in spark.sql("SELECT * FROM sched_out").collect()
-            }
-            if len(got) == 3:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-
+    got = {r["offset"]: r for r in rows_of(batches)}
     assert set(got) == {1, 2, 3}, f"all tasks eventually emitted, got {set(got)}"
     for off, r in got.items():
         assert r["emitted_at_millis"] >= r["scheduled_time_millis"], (
@@ -918,78 +1032,6 @@ def test_streaming_scheduled_holds_until_due(spark, tmp_path):
         )
     # the due k1 task was not blocked behind the scheduled one
     assert got[1]["emitted_at_millis"] < got[2]["scheduled_time_millis"]
-
-
-HOLD_MS = 8_000  # linger / due horizon: longer than a first run's two batches
-# timer fold: (schema, its two input batches given the due time, the
-# fold, its sink rows in a run with no crash, emitted_at dropped)
-TIMER_FOLDS = {
-    "streaming_batch": (
-        "partition int, offset long",
-        lambda due: [[(0, 1), (0, 2)], [(0, 3)]],
-        lambda s: streaming_batch(s, capacity=4, linger_ms=HOLD_MS),
-        lambda due: [(0, 0, 3, 1, 3, "linger")],
-    ),
-    "streaming_scheduled": (
-        "key string, offset long, meta_scheduled_time_millis long",
-        lambda due: [[("k", 1, due), ("k", 2, due)], [("k", 3, due)]],
-        streaming_scheduled,
-        lambda due: [("k", 1, due), ("k", 2, due), ("k", 3, due)],
-    ),
-}
-
-
-@pytest.mark.parametrize("fold", sorted(TIMER_FOLDS))
-def test_timer_fold_replays_on_batch_clock(spark, tmp_path, fold):
-    """A timer fold that crashes after its sink wrote batch 1, and
-    restarts once the linger or due time has passed, delivers offsets
-    1-3 as a run with no crash does. The replayed batch 1 decides on its
-    own timestamp, restored from the offset log, so it flushes or
-    releases nothing, as its first run did; the held tasks reach the
-    sink in the next batch. On the wall clock the replay released them
-    into batch 1, which the sink skips as written, and they were lost."""
-    schema, batches, build, clean = TIMER_FOLDS[fold]
-    due = int(time.time() * 1000) + HOLD_MS
-    stream = build(_file_stream(spark, tmp_path / "src", batches(due), schema))
-    written: dict[int, list] = {}
-
-    def sink(df, batch_id):
-        rows = [tuple(r) for r in df.collect()]  # runs the plan: state commits
-        written.setdefault(batch_id, rows)  # a replayed batch is not rewritten
-
-    def crash_after_batch_1(df, batch_id):
-        sink(df, batch_id)
-        if batch_id == 1:
-            raise RuntimeError("after_write")
-
-    def start(process):
-        return (
-            stream.writeStream.foreachBatch(process)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-
-    def delivered():
-        return sorted(r for rows in written.values() for r in rows)
-
-    with pytest.raises(StreamingQueryException, match="after_write"):
-        start(crash_after_batch_1).awaitTermination(120)
-    time.sleep(HOLD_MS / 1000 + 1)  # the linger / due time passes while down
-    q = start(sink)
-    try:
-        deadline = time.time() + 45
-        while time.time() < deadline and len(delivered()) < len(clean(due)):
-            time.sleep(0.5)
-    finally:
-        q.stop()
-
-    got = delivered()
-    if fold == "streaming_scheduled":
-        assert all(r[3] >= r[2] for r in got), "emitted before its due time"
-        got = [r[:3] for r in got]
-    assert got == clean(due)
 
 
 def test_streaming_batch_seq_counts_on_after_an_exact_flush(spark, tmp_path):
@@ -1002,15 +1044,10 @@ def test_streaming_batch_seq_counts_on_after_an_exact_flush(spark, tmp_path):
             [(0, 4 * i + j) for j in range(4)], "partition int, offset long"
         ).coalesce(1).write.parquet(str(src / f"b{i}"))
         stream = spark.readStream.schema("partition int, offset long").parquet(f"{src}/*")
-        q = (
-            streaming_batch(stream, capacity=4)
-            .writeStream.foreachBatch(lambda df, bid: out.extend(df.collect()))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(once=True)
-            .start()
+        _, batches = run_subscription(
+            streaming_batch(stream, capacity=4), tmp_path / "ckpt", trigger={"once": True}
         )
-        q.awaitTermination(120)
-        q.stop()
+        out += rows_of(batches)
     assert [(r["batch_seq"], r["first_offset"]) for r in out] == [(0, 0), (1, 4)]
 
 
@@ -1111,27 +1148,15 @@ def test_streaming_dedup_across_microbatches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    out = streaming_dedup(stream, within="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
-    got = {r["value"] for r in spark.table("dedup_stream").collect()}
-    assert got == {"payload-A", "payload-B", "payload-C"}
-    assert spark.table("dedup_stream").count() == 3, "duplicate must drop"
+    rows = rows_of(run_subscription(streaming_dedup(stream, within="1 hour"), tmp_path / "ckpt")[1])
+    assert {r["value"] for r in rows} == {"payload-A", "payload-B", "payload-C"}
+    assert len(rows) == 3, "duplicate must drop"
 
 
 def test_streaming_session_windows(spark, tmp_path):
     """session_window over a file stream: records within the gap merge
     into one session per key; a gap larger than `gap` starts a new
     session; the watermark closes sessions for append output."""
-    from decaton_spark.streaming.event_time import session_windows
 
     src = tmp_path / "sess_src"
     schema = "key string, meta_timestamp_millis long"
@@ -1148,31 +1173,19 @@ def test_streaming_session_windows(spark, tmp_path):
 
     stream = spark.readStream.schema(schema).parquet(str(src))
     out = session_windows(stream, gap="30 seconds", watermark="10 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
     got = {
         (r["key"], r["session_start_ms"], r["n_events"])
-        for r in spark.table("sessions").collect()
+        for r in rows_of(run_subscription(out, tmp_path / "ckpt")[1])
     }
     # 'a': one 2-event session + one later singleton; 'b': singleton.
-    # availableNow ends the stream, so the final watermark closes all.
-    assert ("a", base, 2) in got
-    assert ("a", base + 120_000, 1) in got
-    assert ("b", base + 5_000, 1) in got
+    # availableNow ends the stream, so the final watermark closes all
+    # but the sentinel's.
+    assert got == {("a", base, 2), ("a", base + 120_000, 1), ("b", base + 5_000, 1)}
 
 
 def test_idempotent_sink_survives_replay(spark, tmp_path):
     """Replaying a batch id (what Structured Streaming does after an
     uncommitted-batch crash) must not duplicate rows in the sink."""
-    from decaton_spark.streaming.subscription import idempotent_parquet_sink
 
     sink_dir = str(tmp_path / "sink")
     write = idempotent_parquet_sink(sink_dir)
@@ -1190,7 +1203,6 @@ def test_stream_stream_interval_join(spark, tmp_path):
     each retry pairs with the origin attempt within the backoff
     horizon; a retry outside the bound never matches. The streaming
     result over availableNow equals the batch join."""
-    from decaton_spark.streaming.joins import interval_join
 
     base = 1_700_000_000_000
     origins = [(str(k), base + k * 1000) for k in range(20)]
@@ -1224,18 +1236,8 @@ def test_stream_stream_interval_join(spark, tmp_path):
         # test_event_time_compact_drops_late_rows already pins.
         within="1 minutes", left_watermark="20 minutes", right_watermark="20 minutes",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["key"],) for r in spark.sql("SELECT key FROM ssj_out").collect()
-    }
-    assert got == {(str(k),) for k in range(10)}, got
+    got = {r["key"] for r in rows_of(run_subscription(joined)[1])}
+    assert got == {str(k) for k in range(10)}, got
 
     # batch parity: the same helper on static frames
     b = interval_join(
@@ -1247,13 +1249,10 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 
 def test_interval_join_refuses_ambiguity(spark):
-    from decaton_spark.streaming.joins import interval_join
 
     l = spark.createDataFrame([], "key string, ts timestamp, v long")
     r = spark.createDataFrame([], "key string, rts timestamp, v long")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="ambiguous"):
+    with pytest.raises(ValueError, match="ambiguous"):
         interval_join(
             l, r, left_key="key", right_key="key",
             left_ts="ts", right_ts="rts",
@@ -1270,7 +1269,6 @@ def test_streaming_curation_composition(spark, tmp_path):
     from pyspark.sql import functions as FX
 
     from decaton_spark.functions.quality import gopher_filter
-    from decaton_spark.streaming.subscription import idempotent_parquet_sink
 
     good = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     base = 1_700_000_000_000
@@ -1299,13 +1297,7 @@ def test_streaming_curation_composition(spark, tmp_path):
     curated = streaming_dedup(kept, identity=["text"], within="1 hour")
 
     out = str(tmp_path / "curated")
-    q = (
-        curated.writeStream.foreachBatch(idempotent_parquet_sink(out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    run_subscription(curated, tmp_path / "ckpt", process=idempotent_parquet_sink(out))
 
     got = spark.read.parquet(out)
     assert got.count() == 20
@@ -1330,19 +1322,11 @@ def test_stream_static_enrichment_join(spark, sf_dir, task_stream_dir, tmp_path)
         [(str(k), f"tier-{k % 3}") for k in range(64)], "key string, tier string"
     )
     enriched = stream.join(F.broadcast(dim), "key", "left")
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enrich_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    total = spark.table("enrich_out").count()
+    rows = rows_of(run_subscription(enriched)[1])
     batch = spark.read.schema(schema).parquet(path).count()
-    assert total == batch, "stream-static join must not drop or duplicate rows"
+    assert len(rows) == batch, "stream-static join must not drop or duplicate rows"
     assert (
-        spark.table("enrich_out").filter(F.col("tier").isNull()).count()
+        sum(r["tier"] is None for r in rows)
         == spark.read.schema(schema).parquet(path)
         .join(dim, "key", "left_anti").count()
     )
@@ -1354,7 +1338,6 @@ def test_interval_join_state_survives_restart(spark, tmp_path):
     only after the restart (same checkpoint)."""
     import datetime as dt
 
-    from decaton_spark.streaming.joins import interval_join
 
     base = dt.datetime(2024, 1, 1)
     od, rd = tmp_path / "o2", tmp_path / "r2"
@@ -1372,7 +1355,6 @@ def test_interval_join_state_survives_restart(spark, tmp_path):
     ).parquet(str(rd))
 
     out = str(tmp_path / "ssj_out2")
-    from decaton_spark.streaming.subscription import idempotent_parquet_sink
 
     def run_once():
         lo = spark.readStream.schema(schema_o).parquet(str(od))
@@ -1383,14 +1365,7 @@ def test_interval_join_state_survives_restart(spark, tmp_path):
             within="10 minutes", left_watermark="1 hour",
             right_watermark="1 hour",
         )
-        q = (
-            j.writeStream.foreachBatch(idempotent_parquet_sink(out))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        run_subscription(j, ckpt, process=idempotent_parquet_sink(out))
 
     def n_out():
         try:
@@ -1445,14 +1420,7 @@ def test_streaming_corpus_merge_ingest(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(in_dir))
         )
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        q.stop()
+        run_subscription(stream, ckpt, process=ingest)
 
     def corpus():
         return {
@@ -1509,16 +1477,8 @@ def test_streaming_expectations_quarantine_sink(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(in_dir))
         )
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        q.stop()
+        run_subscription(stream, tmp_path / "ckpt", process=gate)
 
-    import time
 
     spark.createDataFrame(
         [(1, 1.0), (2, -2.0)], schema=schema
@@ -1582,16 +1542,8 @@ def test_streaming_bloom_decontaminate_equals_batch(spark, tmp_path):
             (r["doc_id"], r["n_flagged_ngrams"]) for r in flagged.collect()
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-        .writeStream.foreachBatch(screen)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(in_dir))
+    run_subscription(stream, tmp_path / "ckpt", process=screen)
 
     batch = {
         (r["doc_id"], r["n_flagged_ngrams"])
@@ -1640,16 +1592,8 @@ def test_streaming_novelty_equals_batch(spark, tmp_path):
             for r in out.collect()
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-        .writeStream.foreachBatch(score)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(in_dir))
+    run_subscription(stream, tmp_path / "ckpt", process=score)
 
     batch = {
         (r["doc_id"], r["n_grams"], r["novel_grams"], r["novelty_pml"])

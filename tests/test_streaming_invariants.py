@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from decaton_spark.envelope import events_to_tasks
 from decaton_spark.sources import load_table
 from decaton_spark.streaming import ordered_process, streaming_quota
+from tests.utils import rows_of, run_subscription
 
 
 @pytest.fixture(scope="module")
@@ -43,18 +44,7 @@ def stream_parts(spark, sf_dir, tmp_path_factory):
 
 
 def _run(stream_df, tmp_path, name):
-    rows = []
-    q = (
-        stream_df.writeStream.queryName(name)
-        .foreachBatch(lambda df, bid: rows.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt-{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
-    return rows
+    return rows_of(run_subscription(stream_df, tmp_path / f"ckpt-{name}")[1])
 
 
 def test_at_least_once_and_ordering(spark, stream_parts, tmp_path):
@@ -252,35 +242,27 @@ def test_streaming_heavy_hitters_state_survives_restart(spark, sf_dir, tmp_path)
     threshold = 40
     alerts: list = []
 
-    def run_once(qname):
+    def run_once():
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(d))
         )
-        q = (
-            streaming_heavy_hitters(stream, threshold, width=4096)
-            .writeStream.queryName(qname)
-            .foreachBatch(lambda df, bid: alerts.extend(df.collect()))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        q.stop()
+        alerts.extend(rows_of(run_subscription(
+            streaming_heavy_hitters(stream, threshold, width=4096), ckpt
+        )[1]))
 
     # half the offsets, then "crash"; the halves interleave offsets so
     # most keys only become heavy with BOTH halves counted
     tasks.filter(F.col("offset") % 2 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(str(d))
-    run_once("hh_r1")
+    run_once()
     n_before = len(alerts)
     tasks.filter(F.col("offset") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(str(d))
-    run_once("hh_r2")
+    run_once()
 
     truly_heavy = {
         r["key"]
@@ -351,34 +333,24 @@ def test_streaming_lsh_index_survives_restart(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "lsh-ckpt")
     pairs: list = []
 
-    def run_once(qname):
+    def run_once():
         stream = (
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(d))
         )
-        qq = (
-            streaming_lsh_candidates(stream)
-            .writeStream.queryName(qname)
-            .foreachBatch(lambda df, bid: pairs.extend(df.collect()))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qq.awaitTermination(300)
-        qq.stop()
+        pairs.extend(rows_of(run_subscription(streaming_lsh_candidates(stream), ckpt)[1]))
 
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(str(d))
-    run_once("lsh_r1")
+    run_once()
     n_before = len(pairs)
     time.sleep(1.1)
     docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(str(d))
-    run_once("lsh_r2")
+    run_once()
 
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     want = {
@@ -476,34 +448,26 @@ def test_streaming_zscore_state_survives_restart(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "z-ckpt")
     alerts: list = []
 
-    def run_once(qname):
+    def run_once():
         stream = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(d))
         )
-        q = (
-            streaming_zscore_alerts(stream, threshold=2.0, n=10)
-            .writeStream.queryName(qname)
-            .foreachBatch(lambda df, bid: alerts.extend(df.collect()))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        q.stop()
+        alerts.extend(rows_of(run_subscription(
+            streaming_zscore_alerts(stream, threshold=2.0, n=10), ckpt
+        )[1]))
 
     seq.filter(F.col("rn") <= n // 2).drop("rn").coalesce(1).write.mode(
         "append"
     ).parquet(str(d))
-    run_once("z_r1")
+    run_once()
     n_before = len(alerts)
     time.sleep(1.1)
     seq.filter(F.col("rn") > n // 2).drop("rn").coalesce(1).write.mode(
         "append"
     ).parquet(str(d))
-    run_once("z_r2")
+    run_once()
 
     got = {(r["event_id"], r["user_id"]) for r in alerts}
     exp = {
@@ -550,20 +514,11 @@ def test_streaming_kmv_equals_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
-    rows = []
-    q = (
-        streaming_kmv(stream, "user_id", "event_type", k=8)
-        .writeStream.queryName("kmv")
-        .foreachBatch(lambda df, bid: rows.append((bid, df.collect())))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt-kmv"))
-        .trigger(availableNow=True)
-        .start()
+    _, batches = run_subscription(
+        streaming_kmv(stream, "user_id", "event_type", k=8), tmp_path / "ckpt-kmv"
     )
-    q.awaitTermination(300)
-    q.stop()
     last = {}
-    for bid, rs in sorted(rows):
+    for _, rs in batches:
         for r in rs:
             last[r["event_type"]] = (r["n_in_sketch"], r["kmv_distinct_est"])
 
@@ -620,22 +575,12 @@ def test_streaming_histogram_equals_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
-    rows = []
-    q = (
-        streaming_histogram_quantiles(
-            stream, "value", "event_type", bounds=bounds
-        )
-        .writeStream.queryName("hist")
-        .foreachBatch(lambda df, bid: rows.append((bid, df.collect())))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt-hist"))
-        .trigger(availableNow=True)
-        .start()
+    _, batches = run_subscription(
+        streaming_histogram_quantiles(stream, "value", "event_type", bounds=bounds),
+        tmp_path / "ckpt-hist",
     )
-    q.awaitTermination(300)
-    q.stop()
     last = {}
-    for bid, rs in sorted(rows):
+    for _, rs in batches:
         for r in rs:
             last[r["event_type"]] = (
                 r["n"], r["p50_centi"], r["p90_centi"], r["p99_centi"]
@@ -704,22 +649,12 @@ def test_streaming_cusum_equals_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
-    rows = []
-    q = (
-        streaming_cusum(
-            stream, "bucket_ms", "x", "event_type", baselines=baselines
-        )
-        .writeStream.queryName("cusum")
-        .foreachBatch(lambda df, bid: rows.append((bid, df.collect())))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt-cusum"))
-        .trigger(availableNow=True)
-        .start()
+    _, batches = run_subscription(
+        streaming_cusum(stream, "bucket_ms", "x", "event_type", baselines=baselines),
+        tmp_path / "ckpt-cusum",
     )
-    q.awaitTermination(300)
-    q.stop()
     last = {}
-    for bid, rs in sorted(rows):
+    for _, rs in batches:
         for r in rs:
             last[r["event_type"]] = (
                 r["n_alarm_buckets"], r["first_alarm_bucket_ms"]
@@ -784,20 +719,9 @@ def test_streaming_ab_monitor_equals_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
-    rows = []
-    q = (
-        streaming_ab_monitor(stream)
-        .writeStream.queryName("abmon")
-        .foreachBatch(lambda df, bid: rows.append((bid, df.collect())))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt-ab"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
+    _, batches = run_subscription(streaming_ab_monitor(stream), tmp_path / "ckpt-ab")
     last = {}
-    for bid, rs in sorted(rows):
+    for _, rs in batches:
         for r in rs:
             last[r["event_type"]] = (
                 r["n_a"], r["n_b"], r["sum_centi_a"], r["sum_centi_b"],
@@ -836,20 +760,7 @@ def test_ab_monitor_zero_variance_yields_null_t(spark, tmp_path):
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
         str(d)
     )
-    rows = []
-    q = (
-        streaming_ab_monitor(stream)
-        .writeStream.queryName("abconst")
-        .foreachBatch(lambda df, bid: rows.append((bid, df.collect())))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt-abconst"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-    q.stop()
-    out = [r for _, rs in sorted(rows) for r in rs]
+    out = rows_of(run_subscription(streaming_ab_monitor(stream), tmp_path / "ckpt-abconst")[1])
     assert len(out) == 2
     first, last = out
     assert (first["n_a"], first["n_b"]) == (1, 1)
@@ -925,20 +836,11 @@ def test_streaming_psi_monitor_equals_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
-    rows = []
-    q = (
-        streaming_psi_monitor(stream, baselines=baselines)
-        .writeStream.queryName("psimon")
-        .foreachBatch(lambda df, bid: rows.append((bid, df.collect())))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt-psi"))
-        .trigger(availableNow=True)
-        .start()
+    _, batches = run_subscription(
+        streaming_psi_monitor(stream, baselines=baselines), tmp_path / "ckpt-psi"
     )
-    q.awaitTermination(300)
-    q.stop()
     last = {}
-    for bid, rs in sorted(rows):
+    for _, rs in batches:
         for r in rs:
             last[r["event_type"]] = (r["n_buckets"], r["psi_upm"])
     batch = {

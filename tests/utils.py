@@ -1,11 +1,52 @@
-"""Oracle-comparison helper mirroring the driver's check: row count,
-column names, and order-insensitive values."""
+"""Test helpers: the oracle comparison (row count, column names, and
+order-insensitive values), and the one
+runner every streaming-builder test starts its query with."""
 
 from __future__ import annotations
 
 import math
+import time
 
 import pandas as pd
+
+from decaton_spark.streaming.subscription import Subscription, SubscriptionConfig
+
+
+def run_subscription(stream, checkpoint=None, *, process=None, trigger=None, until=None,
+                     timeout_s: float = 300.0):
+    """Run ``stream`` under a ``Subscription`` (its output mode read from
+    the plan) and stop it; returns ``(query, batches)``.
+
+    Unless ``process`` is given, each microbatch's rows are collected
+    into ``batches`` as ``(batch_id, rows)``. The query runs until it
+    ends (``availableNow``, the default ``trigger``, ends at the end of
+    its input) or ``until(batches)`` holds; a query failure is raised,
+    and a query still running after ``timeout_s`` fails the test."""
+    batches: list = []
+    sub = Subscription(
+        stream.sparkSession,
+        stream,
+        process_fn=process or (lambda df, bid: batches.append((bid, df.collect()))),
+        config=SubscriptionConfig(
+            checkpoint_location=checkpoint and str(checkpoint),
+            trigger=trigger or {"availableNow": True},
+        ),
+    )
+    query = sub.start()
+    deadline = time.monotonic() + timeout_s
+    try:
+        while not sub.await_termination(0.5):
+            if until is not None and until(batches):
+                break
+            assert time.monotonic() < deadline, "query did not end"
+    finally:
+        sub.stop()
+    return query, batches
+
+
+def rows_of(batches) -> list:
+    """Every row of ``run_subscription``'s batches, in batch order."""
+    return [r for _, rows in batches for r in rows]
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
